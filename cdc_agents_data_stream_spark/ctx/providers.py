@@ -15,7 +15,9 @@ group, i.e. distributed per session, never in a driver loop. The
 reference's advisory lock around file consumption
 (TestReportContextProvider.java:45-61) is unnecessary: a session key is
 owned by exactly one task per micro-batch (X8), so reads are already
-serialized per key.
+serialized per key. A report a publisher drops in while the provider runs
+is not lost either: the provider deletes only the files it read, so a
+later arrival waits for the next call.
 
 At 100 TB scale the report side-input stays cheap because a provider only
 touches ``<runner_path>/<session_id>`` — one directory per *updated*
@@ -25,7 +27,6 @@ session per batch, not a scan of the whole report tree.
 from __future__ import annotations
 
 import os
-import shutil
 import subprocess
 import time
 from typing import Any, Callable
@@ -52,9 +53,9 @@ def make_test_report_provider(
     Mirrors TestReportContextProvider.java:29-139: for each configured
     runner path, read every file under ``<runner_path>/<session_id>``
     recursively into ``{f"{session_id}:{file_name}": content}``, then
-    delete the session directory's contents so reports are never
-    re-processed. Always emits an item (possibly with an empty report map),
-    exactly like the reference's ``Optional.of(...)``.
+    delete what was read so reports are never re-processed. Always emits
+    an item (possibly with an empty report map), exactly like the
+    reference's ``Optional.of(...)``.
     """
 
     def provider(state_doc: dict[str, Any]) -> dict[str, Any]:
@@ -64,22 +65,8 @@ def make_test_report_provider(
             session_dir = os.path.join(runner_path, session_id)
             if not os.path.isdir(session_dir):
                 continue
-            for dirpath, _dirnames, filenames in os.walk(session_dir):
-                for file_name in filenames:
-                    full = os.path.join(dirpath, file_name)
-                    try:
-                        with open(full, "r", errors="replace") as fh:
-                            # key = registrationId:fileName (TestReportContextProvider.java:105)
-                            reports[f"{session_id}:{file_name}"] = fh.read()
-                    except OSError:
-                        continue
-            # consume-once: delete processed children (TestReportContextProvider.java:122-139)
-            for child in os.listdir(session_dir):
-                child_path = os.path.join(session_dir, child)
-                if os.path.isfile(child_path):
-                    os.unlink(child_path)
-                else:
-                    shutil.rmtree(child_path, ignore_errors=True)
+            read = _read_reports(session_id, session_dir, reports)
+            _consume(session_dir, read)
         return {
             "type": "test-report",
             "sessionId": session_id,
@@ -88,6 +75,44 @@ def make_test_report_provider(
         }
 
     return provider
+
+
+def _read_reports(
+    session_id: str, session_dir: str, reports: dict[str, str]
+) -> list[tuple[str, int]]:
+    """Read every file under ``session_dir`` into ``reports``; returns the
+    (path, inode) of each file read."""
+    read: list[tuple[str, int]] = []
+    for dirpath, _dirnames, filenames in os.walk(session_dir):
+        for file_name in filenames:
+            full = os.path.join(dirpath, file_name)
+            try:
+                with open(full, "r", errors="replace") as fh:
+                    # key = registrationId:fileName (TestReportContextProvider.java:105)
+                    reports[f"{session_id}:{file_name}"] = fh.read()
+                    read.append((full, os.fstat(fh.fileno()).st_ino))
+            except OSError:
+                continue
+    return read
+
+
+def _consume(session_dir: str, read: list[tuple[str, int]]) -> None:
+    """Consume-once (TestReportContextProvider.java:122-139): unlink exactly
+    the files that were read, then remove subdirectories left empty. A
+    report that arrived after the read (a new file, or a rename over a read
+    one) stays for the next call; the session directory itself is kept."""
+    for path, ino in read:
+        try:
+            if os.stat(path).st_ino == ino:
+                os.unlink(path)
+        except OSError:
+            continue
+    for dirpath, _dirnames, _filenames in os.walk(session_dir, topdown=False):
+        if dirpath != session_dir:
+            try:
+                os.rmdir(dirpath)
+            except OSError:
+                continue  # not empty: holds a report that arrived after the read
 
 
 def environment_provider(

@@ -27,14 +27,19 @@ Reference semantics:
   (dao/CheckpointDao.java:58-82).
 
 State document shape (entity/CdcAgentsDataStream.java:28-65):
-``{session_id, sequence_number, cdc_content, ide_content, metadata, ctx,
-cdc_checkpoint_diffs, ide_checkpoint_diffs}`` where content maps are
+``{session_id, sequence_number, cdc_content, ide_content, metadata, ctx}``
+where content maps are
 ``{task_id: [{content, timestamp, thread_id, checkpoint_id, task_id}]}``.
+The reference also appends every diff to the entity's
+``cdcCheckpointDiffs`` / ``ideCheckpointDiffs`` columns; here ``transition``
+only returns the diff and the caller appends it to the diff log
+(``state.store.ParquetAppendLog``), so the document stays bounded by the
+current content instead of growing with the session's age. Diff history is
+read back with ``ParquetAppendLog.read(dedup=True)``.
 """
 
 from __future__ import annotations
 
-import copy
 from typing import Any, Callable
 
 from ..functions.diffkernel import diff_task_maps
@@ -56,8 +61,6 @@ def new_state(session_id: str) -> dict[str, Any]:
         "ide_content": {},
         "metadata": {},
         "ctx": [],
-        "cdc_checkpoint_diffs": [],
-        "ide_checkpoint_diffs": [],
     }
 
 
@@ -106,10 +109,14 @@ def transition(
     Returns ``(new_state, diff_doc_or_None)``. The state is always returned
     (and should be persisted) even when the diff is empty — the reference
     saves unconditionally after addCtx (service/DataStreamService.java:42-54).
+    The diff is not recorded in the state; persisting it is the caller's job.
+
+    ``state`` is left unmodified: the returned document is a shallow copy
+    whose changed content map and ctx list are new objects (items themselves
+    are shared, never mutated).
     """
     content_key = f"{source}_content"
-    diffs_key = f"{source}_checkpoint_diffs"
-    state = copy.deepcopy(state) if state is not None else new_state(session_id)
+    state = dict(state) if state is not None else new_state(session_id)
 
     # A1: argmax per task by (timestamp, checkpoint_id) — same deterministic
     # tie-break as the DataFrame-side max_by in operators/latest.py, so
@@ -124,7 +131,8 @@ def transition(
             newest_per_task[item["task_id"]] = item
 
     prev_content = state[content_key]
-    next_content = copy.deepcopy(prev_content)
+    # per-task list copies: merge_item mutates the lists of the map it is given
+    next_content = {task_id: list(items) for task_id, items in prev_content.items()}
     for task_id, item in newest_per_task.items():
         if skip_parsing_checkpoint(prev_content.get(task_id), item["timestamp"]):
             continue  # X3: stale event dropped
@@ -134,8 +142,6 @@ def transition(
     diff_doc = diff_task_maps(prev_content, next_content, seq)
 
     state[content_key] = next_content
-    if diff_doc is not None:
-        state[diffs_key] = state.get(diffs_key, []) + [diff_doc]
 
     ctx_added = False
     for provider in ctx_providers or []:

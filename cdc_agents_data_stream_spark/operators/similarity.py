@@ -629,10 +629,10 @@ def pq_train_codebooks(
         & (F.col(id_col) < PQ_CODE_MOD * PQ_MAX_CODES)
     ).select(F.col(id_col).alias("code_id"), "s", F.col("sv").alias("cv"))
     for _ in range(iters):
-        # Each Lloyd iteration: collect the codebook (bounded: ≤ PQ_MAX_CODES
-        # codes × m subspaces, never corpus rows), then
-        # one vectorized map-only assignment pass over the corpus — see
+        # Each Lloyd iteration: collect the codebook, then one vectorized
+        # map-only assignment pass over the corpus — see
         # _pq_assign_vectorized for why this beats the broadcast-join form.
+        # bounded: ≤ PQ_MAX_CODES codes × m subspaces, never corpus rows
         assigned = _pq_assign_vectorized(
             sub, codes.collect(), sub_len, id_col, keep_sv=True
         )

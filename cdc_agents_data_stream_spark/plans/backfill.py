@@ -22,7 +22,6 @@ import json
 import time
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -30,7 +29,7 @@ from pyspark.sql.types import StructType
 
 from ..operators.latest import ide_latest_blobs_per_task, latest_blobs_per_task
 from ..operators.merge import transition
-from ..schemas import CHECKPOINT_DIFFS_SCHEMA, DATA_STREAM_STATE_SCHEMA
+from ..schemas import DATA_STREAM_STATE_SCHEMA
 from ..state.store import ParquetAppendLog, ParquetStateStore
 
 # applyInPandas output: the full state row plus the (nullable) diff produced
@@ -38,7 +37,6 @@ from ..state.store import ParquetAppendLog, ParquetStateStore
 _TRANSITION_OUTPUT = (
     "session_id string, sequence_number int, cdc_content string, "
     "ide_content string, metadata string, ctx string, "
-    "cdc_checkpoint_diffs string, ide_checkpoint_diffs string, "
     "updated_ts_millis long, batch_diff string"
 )
 
@@ -52,8 +50,6 @@ def state_row_to_doc(row: dict[str, Any]) -> dict[str, Any]:
         "ide_content": json.loads(row["ide_content"] or "{}"),
         "metadata": json.loads(row["metadata"] or "{}"),
         "ctx": json.loads(row["ctx"] or "[]"),
-        "cdc_checkpoint_diffs": json.loads(row["cdc_checkpoint_diffs"] or "[]"),
-        "ide_checkpoint_diffs": json.loads(row["ide_checkpoint_diffs"] or "[]"),
     }
 
 
@@ -65,62 +61,26 @@ def doc_to_state_row(doc: dict[str, Any], updated_ts_millis: int) -> dict[str, A
         "ide_content": json.dumps(doc["ide_content"]),
         "metadata": json.dumps(doc.get("metadata") or {}),
         "ctx": json.dumps(doc.get("ctx") or []),
-        "cdc_checkpoint_diffs": json.dumps(doc.get("cdc_checkpoint_diffs") or []),
-        "ide_checkpoint_diffs": json.dumps(doc.get("ide_checkpoint_diffs") or []),
         "updated_ts_millis": updated_ts_millis,
     }
 
 
-def make_transition_fn(source: str, ctx_providers=None, now_ms: int | None = None):
-    """Grouped state transition for ``applyInPandas`` — one group per
-    session; input columns: thread_id, task_id, content, ts_millis,
-    checkpoint_id, plus the prior state row columns (nullable).
-    ``ctx_providers`` (UD5) run inside the group — distributed per
-    session, consume-once side inputs stay serialized per key (X8/X9).
+def make_transition_rows_fn(source: str, ctx_providers=None, now_ms: int | None = None):
+    """Per-session state transition for the Arrow path: takes
+    ``(session_id, rows)`` where ``rows`` is a list of plain dicts (Arrow
+    nulls arrive as ``None``): thread_id, task_id, content, ts_millis,
+    checkpoint_id, plus the prior state row columns (null when the session
+    is new). Returns ONE output dict: the new state row plus ``batch_diff``,
+    the JSON of this batch's diff (None when nothing changed).
+    ``ctx_providers`` (UD5) run inside the group — distributed per session,
+    consume-once side inputs stay serialized per key (X8/X9).
 
     ``now_ms`` is the single batch timestamp stamped on every state row —
     passed in (not read per group) so replaying a batch writes
     byte-identical rows; the small-batch driver path uses one ``now_ms``
-    the same way."""
-    batch_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        session_id = key[0]
-        prior = None
-        first = pdf.iloc[0]
-        if pd.notna(first.get("sequence_number")):
-            raw = {
-                c: (first[c] if isinstance(first.get(c), str) else None)
-                for c in DATA_STREAM_STATE_SCHEMA.fieldNames()
-            }
-            raw["session_id"] = session_id
-            raw["sequence_number"] = int(first["sequence_number"])
-            prior = state_row_to_doc(raw)
-        items = [
-            {
-                "task_id": r.task_id,
-                "content": r.content,
-                "timestamp": int(r.ts_millis),
-                "thread_id": session_id,
-                "checkpoint_id": r.checkpoint_id,
-            }
-            for r in pdf.itertuples()
-            if pd.notna(r.task_id)
-        ]
-        doc, diff = transition(prior, session_id, items, source=source, ctx_providers=ctx_providers)
-        out = doc_to_state_row(doc, batch_ms)
-        out["batch_diff"] = json.dumps(diff) if diff is not None else None
-        return pd.DataFrame([out])
-
-    return fn
-
-
-def make_transition_rows_fn(source: str, ctx_providers=None, now_ms: int | None = None):
-    """Dict-native sibling of ``make_transition_fn`` for the Arrow path:
-    takes ``(session_id, rows)`` where ``rows`` is a list of plain dicts
-    (Arrow nulls arrive as ``None``), returns ONE output dict. Same
-    semantics — ``transition`` itself consumes and produces plain dicts,
-    so no DataFrame needs to exist on either side of it."""
+    the same way. Prior-row columns outside ``DATA_STREAM_STATE_SCHEMA``
+    (the diff-history columns of stores written before diffs left the
+    state row) are ignored."""
     batch_ms = now_ms if now_ms is not None else int(time.time() * 1000)
     state_fields = DATA_STREAM_STATE_SCHEMA.fieldNames()
 
@@ -187,6 +147,10 @@ def _run_transition(
     DataFrame per session) measured ~16 s of executor CPU for 2000
     sessions; the dict path cuts the per-session cost to the transition
     kernel itself plus C-speed Arrow<->pylist conversion."""
+    # a store written before diffs left the state row still carries the
+    # diff-history columns; they stay out of the join and the Python workers
+    state_cols = set(DATA_STREAM_STATE_SCHEMA.fieldNames())
+    state_df = state_df.select(*[c for c in state_df.columns if c in state_cols])
     if broadcast_state:
         state_df = F.broadcast(state_df)
     enriched = latest.withColumnRenamed("thread_id", "session_id").join(

@@ -120,12 +120,12 @@ def merge_transition_seq(spark, sf_dir):
                 "checkpoint_id": cp,
             }
 
-        s1, _ = transition(
+        s1, d1 = transition(
             None,
             sid,
             [item("t", f"a-{max_ev}", 2, "b1-t"), item("s__start__", "s1", 2, "b1-s")],
         )
-        s2, _ = transition(
+        s2, d2 = transition(
             s1,
             sid,
             [
@@ -143,7 +143,7 @@ def merge_transition_seq(spark, sf_dir):
                     "t_content": c["t"][0]["content"],
                     "u_content": c["u"][0]["content"],
                     "n_start": len(c["s__start__"]),
-                    "n_diffs": len(s2["cdc_checkpoint_diffs"]),
+                    "n_diffs": sum(d is not None for d in (d1, d2)),
                 }
             ]
         )
@@ -266,7 +266,7 @@ def merge_empty_diff_suppress(spark, sf_dir):
                 {
                     "user_id": uid,
                     "seq": s3["sequence_number"],
-                    "n_diffs": len(s3["cdc_checkpoint_diffs"]),
+                    "n_diffs": sum(d is not None for d in (d1, d2, d3)),
                     "replay_suppressed": int(d2 is None and s2["sequence_number"] == 1),
                     "t_content": s3["cdc_content"]["t"][0]["content"],
                 }

@@ -79,7 +79,8 @@ def backfill_state_build(spark, sf_dir):
     resulting state documents are cracked back open for the oracle:
     one row per (session, task) with the absorbed content, the session's
     sequence number (must be 1: first absorbing batch, X6) and its diff-doc
-    count (must be 1: one diff doc per absorbing batch, X5).
+    count (must be 1: one diff doc per absorbing batch, X5), read from the
+    batch's returned diff — diffs are not kept in the state row.
 
     ``updated_ts_millis``/``batch_diff`` are dropped — wall-clock stamps
     are the one non-deterministic state field (documented replay caveat,
@@ -99,7 +100,8 @@ def backfill_state_build(spark, sf_dir):
         updated.select(
             "session_id",
             F.col("sequence_number").cast("long").alias("seq"),
-            F.json_array_length("cdc_checkpoint_diffs").cast("long").alias("n_diffs"),
+            # the prior state is empty, so this batch's diff is the whole history
+            F.when(F.col("batch_diff").isNotNull(), 1).otherwise(0).cast("long").alias("n_diffs"),
             F.explode(content).alias("task_id", "items"),
         )
         .select(
@@ -138,8 +140,8 @@ def backfill_dual_stream(spark, sf_dir):
     (plans/backfill.py::backfill) fanning in BOTH streams against a real
     (temp-dir) versioned state store — the CDC pass absorbs message blobs,
     then the IDE pass (dao/IdeCheckpointDao.java:58-80) merges into the
-    same session documents, writing its disjoint columns
-    (``ide_content``/``ide_checkpoint_diffs``) and advancing the shared
+    same session documents, writing its disjoint column (``ide_content``;
+    its diffs go to the log tagged ``source='ide'``) and advancing the shared
     sequence number. The final store snapshot is cracked open to one row
     per (session, stream, task) with the absorbed content; the session's
     seq must equal the number of streams that absorbed a batch.
@@ -693,8 +695,9 @@ QUERIES["applog_write_roundtrip"] = Q(
 
 def difflog_replay_equivalence(spark, sf_dir):
     """Event-sourcing invariant, machine-checked per session: replaying
-    the state document's accumulated diff docs (X5) from an empty map
-    must reconstruct EXACTLY the final absorbed content — i.e. the diff
+    the diff docs the two absorbing batches emitted (X5; each pass's
+    ``batch_diff``, what the diff log receives) from an empty map must
+    reconstruct EXACTLY the final absorbed content — i.e. the diff
     log alone is sufficient to rebuild state (the property the
     reference's DiffServiceTest replay helper pins per kernel call,
     here end-to-end through TWO absorbing batches of the real
@@ -712,12 +715,10 @@ def difflog_replay_equivalence(spark, sf_dir):
     w1, c1 = _synthetic_write_tables(ev.filter(F.col("event_id") % 2 == 0))
     w2, c2 = _synthetic_write_tables(ev.filter(F.col("event_id") % 2 == 1))
     empty_state = spark.createDataFrame([], DATA_STREAM_STATE_SCHEMA)
-    s1 = _run_transition(latest_blobs_per_task(w1, c1), empty_state, "cdc").drop(
-        "batch_diff"
-    )
+    s1 = _run_transition(latest_blobs_per_task(w1, c1), empty_state, "cdc")
     s2 = _run_transition(
-        latest_blobs_per_task(w2, c2), s1, "cdc", broadcast_state=True
-    )
+        latest_blobs_per_task(w2, c2), s1.drop("batch_diff"), "cdc", broadcast_state=True
+    ).join(s1.select("session_id", F.col("batch_diff").alias("diff_1")), "session_id", "left")
 
     import json as _json
 
@@ -727,7 +728,7 @@ def difflog_replay_equivalence(spark, sf_dir):
         for pdf in batches:
             out = []
             for r in pdf.itertuples():
-                diffs = _json.loads(r.cdc_checkpoint_diffs or "[]")
+                diffs = [_json.loads(d) for d in (r.diff_1, r.batch_diff) if d is not None]
                 task_lines: dict = {}
                 for doc in sorted(diffs, key=lambda d: d["sequenceNumber"]):
                     for task, td in (doc.get("diffData") or {}).items():

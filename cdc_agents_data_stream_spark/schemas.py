@@ -82,7 +82,13 @@ LATEST_CHECKPOINTS_SCHEMA = T.StructType(
 
 # --- sink tables --------------------------------------------------------------
 
-# Per-session state document (entity/CdcAgentsDataStream.java:28-65).
+# Per-session state document (entity/CdcAgentsDataStream.java:28-65). The
+# entity's cdcCheckpointDiffs / ideCheckpointDiffs history is not a state
+# column: diffs live only in the append-only diff table below. Stores written
+# while the state row still carried ``cdc_checkpoint_diffs`` /
+# ``ide_checkpoint_diffs`` keep reading and upserting: the store's schema
+# union reads those columns back as extra columns, null in every row and
+# bucket rewritten since.
 DATA_STREAM_STATE_SCHEMA = T.StructType(
     [
         T.StructField("session_id", T.StringType(), False),
@@ -91,8 +97,6 @@ DATA_STREAM_STATE_SCHEMA = T.StructType(
         T.StructField("ide_content", T.StringType(), True),
         T.StructField("metadata", T.StringType(), True),
         T.StructField("ctx", T.StringType(), True),  # json array of tagged ctx items
-        T.StructField("cdc_checkpoint_diffs", T.StringType(), True),  # json array
-        T.StructField("ide_checkpoint_diffs", T.StringType(), True),
         T.StructField("updated_ts_millis", T.LongType(), True),
     ]
 )

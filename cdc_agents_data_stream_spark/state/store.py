@@ -75,8 +75,6 @@ _STATE_PA_SCHEMA = pa.schema(
         ("ide_content", pa.string()),
         ("metadata", pa.string()),
         ("ctx", pa.string()),
-        ("cdc_checkpoint_diffs", pa.string()),
-        ("ide_checkpoint_diffs", pa.string()),
         ("updated_ts_millis", pa.int64()),
     ]
 )

@@ -28,7 +28,11 @@ At scale: the writes source is partitioned/bucketed by ``thread_id`` so
 the groupBy shuffles align; the checkpoint pointer join broadcasts when
 the per-batch slice is small; state size stays bounded because content
 maps hold only the latest item per task (plus ``__start__`` history) —
-diffs go to the append-only log, not into state.
+diffs go to the append-only log, not into state. A session's diff history
+is read with ``ParquetAppendLog.read(dedup=True)``; state rows written
+before diffs left the state row may still carry the old
+``cdc_checkpoint_diffs`` / ``ide_checkpoint_diffs`` columns, which the
+store reads back as extra columns and the transition ignores.
 """
 
 from __future__ import annotations
@@ -308,8 +312,9 @@ def run_foreachbatch_pipeline(
             _process_large(batch_df)
             return
         # fallback: one probe job doubles as the emptiness check and the
-        # fast-path collect; bounded: limit(small_batch_max_rows + 1) caps
-        # the read regardless of batch size
+        # fast-path collect
+        # bounded: limit(small_batch_max_rows + 1) caps the read regardless
+        # of batch size
         probe = batch_df.limit(small_batch_max_rows + 1).collect()
         if not probe:
             return

@@ -116,17 +116,15 @@ def test_backfill_large_result_uses_distributed_merge(spark, paths):
     assert out["small"]["diff_keys"] == out["large"]["diff_keys"]
 
 
-def test_transition_rows_fn_matches_pandas_fn():
-    """The Arrow path's dict-native group transition must produce exactly
-    the row the pandas ``make_transition_fn`` produces — for a fresh
-    session (all-None state columns), a session with prior state, and
-    rows with a None task_id (the noise rows the filter must drop)."""
-    import pandas as pd
-
-    from cdc_agents_data_stream_spark.operators.merge import new_state
+def test_transition_rows_fn_matches_transition():
+    """The Arrow path's per-session function is ``transition`` plus the
+    state-row codec and nothing else — for a fresh session (all-None state
+    columns), a session with prior state, a prior row that still carries
+    the diff-history columns of an older store, and rows with a None
+    task_id (the noise rows the filter must drop)."""
+    from cdc_agents_data_stream_spark.operators.merge import new_state, transition
     from cdc_agents_data_stream_spark.plans.backfill import (
         doc_to_state_row,
-        make_transition_fn,
         make_transition_rows_fn,
     )
     from cdc_agents_data_stream_spark.schemas import DATA_STREAM_STATE_SCHEMA
@@ -140,10 +138,14 @@ def test_transition_rows_fn_matches_pandas_fn():
                                         "thread_id": "s-1", "checkpoint_id": "cp0",
                                         "task_id": "t1"}]}
     prior_row = doc_to_state_row(prior_doc, now - 1000)
+    legacy_cols = {"cdc_checkpoint_diffs": '[{"sequenceNumber": 3}]',
+                   "ide_checkpoint_diffs": "[]"}
 
-    def mk_rows(session_id, with_prior):
-        base = {c: (prior_row[c] if with_prior else None) for c in state_cols}
+    def mk_rows(session_id, prior):
+        base = {c: (prior[c] if prior else None) for c in state_cols}
         base.pop("updated_ts_millis", None)
+        if prior:
+            base.update({c: prior[c] for c in legacy_cols if c in prior})
         rows = []
         for i, task in enumerate(["t1", "t2", None]):
             r = dict(base)
@@ -157,13 +159,22 @@ def test_transition_rows_fn_matches_pandas_fn():
             rows.append(r)
         return rows
 
-    fn_pd = make_transition_fn("cdc", None, now)
     fn_rows = make_transition_rows_fn("cdc", None, now)
-    for sid, with_prior in (("s-0", False), ("s-1", True)):
-        rows = mk_rows(sid, with_prior)
-        out_pd = fn_pd((sid,), pd.DataFrame(rows)).iloc[0].to_dict()
-        out_rows = fn_rows(sid, rows)
-        assert out_pd == out_rows, f"mismatch for {sid}: {out_pd} vs {out_rows}"
+    for sid, prior in (
+        ("s-0", None),
+        ("s-1", prior_row),
+        ("s-1", {**prior_row, **legacy_cols}),
+    ):
+        rows = mk_rows(sid, prior)
+        items = [
+            {"task_id": r["task_id"], "content": r["content"], "timestamp": r["ts_millis"],
+             "thread_id": sid, "checkpoint_id": r["checkpoint_id"]}
+            for r in rows
+            if r["task_id"] is not None
+        ]
+        doc, diff = transition(prior_doc if prior else None, sid, items, source="cdc")
+        expected = {**doc_to_state_row(doc, now), "batch_diff": json.dumps(diff)}
+        assert fn_rows(sid, rows) == expected, f"mismatch for {sid}"
 
 
 def test_diff_content_shape(spark, paths):
@@ -176,3 +187,81 @@ def test_diff_content_shape(spark, paths):
     ch = diff_data["0_task"]["changes"][0]["change"]
     assert ch["type"] == "insert_content"
     assert ch["linesToAdd"]["start"] == 0
+
+
+@pytest.mark.parametrize("threshold", [500, 0], ids=["driver-merge", "distributed-merge"])
+def test_store_with_diff_history_columns_reads_and_upserts(spark, paths, monkeypatch, threshold):
+    """A store written while the state row still carried the
+    ``cdc_checkpoint_diffs`` / ``ide_checkpoint_diffs`` columns (by both
+    write paths: the distributed MERGE and the driver-side pyarrow MERGE,
+    whose schema constants are swapped back for the legacy write) keeps
+    reading and absorbing batches: the transition ignores the old columns,
+    rows it writes carry none, and untouched rows keep theirs."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from cdc_agents_data_stream_spark.plans.backfill import apply_transition_batch
+    from cdc_agents_data_stream_spark.schemas import DATA_STREAM_STATE_SCHEMA
+    from cdc_agents_data_stream_spark.state import store as store_mod
+
+    legacy_cols = ["cdc_checkpoint_diffs", "ide_checkpoint_diffs"]
+    fields = DATA_STREAM_STATE_SCHEMA.fields
+    legacy_schema = T.StructType(
+        fields[:-1] + [T.StructField(c, T.StringType(), True) for c in legacy_cols] + fields[-1:]
+    )
+    pa_fields = list(store_mod._STATE_PA_SCHEMA)
+    legacy_pa = pa.schema(pa_fields[:-1] + [(c, pa.string()) for c in legacy_cols] + pa_fields[-1:])
+
+    def legacy_row(sid, content):
+        return {
+            "session_id": sid,
+            "sequence_number": 1,
+            "cdc_content": json.dumps({"t": [{"content": content, "timestamp": 10,
+                                              "thread_id": sid, "checkpoint_id": "c1",
+                                              "task_id": "t"}]}),
+            "ide_content": "{}",
+            "metadata": "{}",
+            "ctx": "[]",
+            "cdc_checkpoint_diffs": json.dumps([{"sequenceNumber": 1, "diffData": {}}]),
+            "ide_checkpoint_diffs": "[]",
+            "updated_ts_millis": 1_000,
+        }
+
+    store = ParquetStateStore(spark, str(paths / "state"), n_buckets=4)
+    store.upsert(spark.createDataFrame([legacy_row(f"s{i}", "old") for i in range(4)], legacy_schema))
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "_STATE_PA_SCHEMA", legacy_pa)
+        m.setattr(store_mod, "DATA_STREAM_STATE_SCHEMA", legacy_schema)
+        store.upsert_rows([legacy_row(f"s{i}", "old") for i in range(4, 8)])
+
+    before = {r["session_id"]: r.asDict() for r in store.read().collect()}
+    assert set(legacy_cols) <= set(store.read().columns) and len(before) == 8
+    assert set(store.read_docs(["s0", "s5"])) == {"s0", "s5"}
+
+    touched = ["s0", "s5"]
+    latest = spark.createDataFrame(
+        [(sid, "t", "new", 20, "c2") for sid in touched],
+        "thread_id string, task_id string, content string, ts_millis long, checkpoint_id string",
+    )
+    log = ParquetAppendLog(spark, str(paths / "diffs"))
+    n = apply_transition_batch(latest, store, log, "cdc", now_ms=2_000, small_result_max_rows=threshold)
+    assert n == len(touched)
+
+    after = {r["session_id"]: r.asDict() for r in store.read().collect()}
+    assert set(after) == set(before)
+    for sid, row in after.items():
+        content = json.loads(row["cdc_content"])["t"][0]["content"]
+        if sid in touched:
+            assert (row["sequence_number"], content) == (2, "new")
+            assert all(row.get(c) is None for c in legacy_cols)
+        else:
+            assert (row["sequence_number"], content) == (1, "old")
+    diffs = log.read(dedup=True).select("session_id", "sequence_number").collect()
+    assert sorted(tuple(r) for r in diffs) == [(sid, 2) for sid in touched]
+    # the distributed MERGE keeps the old columns on rows it does not replace
+    if threshold == 0:
+        untouched = [sid for sid in after if sid not in touched]
+        assert all(after[s]["cdc_checkpoint_diffs"] == before[s]["cdc_checkpoint_diffs"] for s in untouched)
+    # a second batch reads back what the first wrote, through either path
+    store.upsert_rows([{**after["s1"], "sequence_number": 3}])
+    assert {r["session_id"]: r["sequence_number"] for r in store.read().collect()}["s1"] == 3

@@ -8,8 +8,10 @@ collects gate results.)"""
 
 from __future__ import annotations
 
+import io
 import pathlib
 import re
+import tokenize
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent / "cdc_agents_data_stream_spark"
 
@@ -62,14 +64,35 @@ ALLOWED = {
     ),
 }
 
-_CALL = re.compile(r"\.collect\(\)")
-
 # Every call site must carry a machine-checkable bound annotation: a
-# `bounded:` comment on the same line or within the ANNOTATION_WINDOW
+# `# bounded:` comment on the same line or within the ANNOTATION_WINDOW
 # lines above it, stating the row bound the way MAX_CENTROIDS /
-# PQ_MAX_CODES sites do (e.g. "# bounded: ≤ MAX_CENTROIDS rows").
+# PQ_MAX_CODES sites do (e.g. "# bounded: ≤ MAX_CENTROIDS rows"). Only
+# real tokens count: `.collect()` or `bounded:` inside a string literal or
+# docstring is neither a call site nor an annotation.
 ANNOTATION_WINDOW = 6
-_BOUND = re.compile(r"bounded:")
+_BOUND = re.compile(r"#\s*bounded:")
+
+
+def _scan(source: str) -> tuple[list[int], set[int]]:
+    """(line of each `.collect()` call, lines holding a `# bounded:`
+    comment) from the token stream of one module."""
+    toks = [
+        t
+        for t in tokenize.generate_tokens(io.StringIO(source).readline)
+        if t.type not in (tokenize.NL, tokenize.NEWLINE, tokenize.INDENT, tokenize.DEDENT)
+    ]
+    calls = [
+        toks[i + 1].start[0]
+        for i in range(len(toks) - 3)
+        if toks[i].string == "."
+        and toks[i + 1].type == tokenize.NAME
+        and toks[i + 1].string == "collect"
+        and toks[i + 2].string == "("
+        and toks[i + 3].string == ")"
+    ]
+    bounds = {t.start[0] for t in toks if t.type == tokenize.COMMENT and _BOUND.match(t.string)}
+    return calls, bounds
 
 
 def test_engine_collect_sites_are_audited():
@@ -77,23 +100,33 @@ def test_engine_collect_sites_are_audited():
     unannotated: list[str] = []
     for d in ENGINE_DIRS:
         for f in sorted((ROOT / d).glob("**/*.py")):
-            lines = f.read_text().splitlines()
             rel = str(f.relative_to(ROOT))
-            n = 0
-            for i, line in enumerate(lines):
-                if not _CALL.search(line):
-                    continue
-                n += 1
-                window = lines[max(0, i - ANNOTATION_WINDOW) : i + 1]
-                if not any(_BOUND.search(w) for w in window):
-                    unannotated.append(f"{rel}:{i + 1}")
-            if n:
-                found[rel] = n
+            calls, bounds = _scan(f.read_text())
+            for line in calls:
+                if not bounds & set(range(line - ANNOTATION_WINDOW, line + 1)):
+                    unannotated.append(f"{rel}:{line}")
+            if calls:
+                found[rel] = len(calls)
     assert found == {k: v[0] for k, v in ALLOWED.items()}, (
         f"collect() call sites changed: found {found}; audit any new site "
         f"for boundedness and record it in ALLOWED with its justification"
     )
     assert not unannotated, (
-        f"collect() sites missing a 'bounded:' annotation within "
+        f"collect() sites missing a '# bounded:' comment within "
         f"{ANNOTATION_WINDOW} lines: {unannotated}"
     )
+
+
+def test_scan_counts_only_real_calls_and_comment_annotations():
+    src = (
+        'x = "df.collect()"\n'
+        "def f():\n"
+        '    """bounded: in a docstring\n'
+        '    .collect()"""\n'
+        "    # bounded: one row\n"
+        "    return df.collect()\n"
+        "def g():\n"
+        "    y = 1  # not bounded: trailing text\n"
+        "    return df . collect ( )\n"
+    )
+    assert _scan(src) == ([6, 9], {5})

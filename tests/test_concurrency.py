@@ -31,8 +31,6 @@ def _state_row(sid: str, seq: int) -> dict:
         "ide_content": "{}",
         "metadata": "{}",
         "ctx": "[]",
-        "cdc_checkpoint_diffs": "[]",
-        "ide_checkpoint_diffs": "[]",
         "updated_ts_millis": 1_700_000_000_000,
     }
 

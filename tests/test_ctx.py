@@ -44,6 +44,43 @@ def test_test_report_provider_consume_once(tmp_path):
     assert provider({"session_id": "s1"})["testReports"] == {}
 
 
+def test_test_report_provider_keeps_reports_that_land_after_the_read(tmp_path, monkeypatch):
+    """A report published between the provider's read and its delete is
+    not lost: it survives the call and is consumed by the next one. The
+    arrival is injected deterministically at that point."""
+    from cdc_agents_data_stream_spark.ctx import providers as P
+
+    runner = tmp_path / "reports"
+    sess = runner / "s1"
+    (sess / "sub").mkdir(parents=True)
+    (sess / "r0.txt").write_text("first")
+    (sess / "sub" / "r1.xml").write_text("<first/>")
+
+    consume = P._consume
+
+    def publish_then_consume(session_dir, read):
+        # a new file in a subdirectory, and a rename over a file already read
+        (sess / "sub" / "late.xml").write_text("<late/>")
+        (sess / "r0.tmp").write_text("second")
+        os.replace(sess / "r0.tmp", sess / "r0.txt")
+        consume(session_dir, read)
+
+    monkeypatch.setattr(P, "_consume", publish_then_consume)
+    provider = make_test_report_provider([str(runner)])
+    assert provider({"session_id": "s1"})["testReports"] == {
+        "s1:r0.txt": "first", "s1:r1.xml": "<first/>"
+    }
+    assert sorted(os.listdir(sess)) == ["r0.txt", "sub"]
+    assert os.listdir(sess / "sub") == ["late.xml"]
+
+    monkeypatch.setattr(P, "_consume", consume)
+    assert provider({"session_id": "s1"})["testReports"] == {
+        "s1:r0.txt": "second", "s1:late.xml": "<late/>"
+    }
+    assert os.listdir(sess) == []
+    assert provider({"session_id": "s1"})["testReports"] == {}
+
+
 def test_provider_seq_stamping_in_transition(tmp_path):
     """Ctx items get the same sequence number as the concurrently-produced
     diff (ContextService.java:40-44)."""

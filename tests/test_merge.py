@@ -85,17 +85,20 @@ def test_transition_sequences_and_diff_log():
     state, d1 = transition(None, "s1", [item("t1", "a", 1)])
     state, d2 = transition(state, "s1", [item("t1", "b", 2)])
     state, d3 = transition(state, "s1", [item("t1", "c", 3)])
-    assert [d["sequenceNumber"] for d in state["cdc_checkpoint_diffs"]] == [1, 2, 3]
+    assert [d["sequenceNumber"] for d in (d1, d2, d3)] == [1, 2, 3]
     assert state["sequence_number"] == 3
+    # the diff history lives in the diff log, not in the state document
+    assert set(state) == {
+        "session_id", "sequence_number", "cdc_content", "ide_content", "metadata", "ctx"
+    }
 
 
 def test_dual_stream_disjoint_columns():
-    state, _ = transition(None, "s1", [item("t1", "cdc-data", 1)], source="cdc")
-    state, _ = transition(state, "s1", [item("t1", "ide-data", 2)], source="ide")
+    state, d_cdc = transition(None, "s1", [item("t1", "cdc-data", 1)], source="cdc")
+    state, d_ide = transition(state, "s1", [item("t1", "ide-data", 2)], source="ide")
     assert state["cdc_content"]["t1"][0]["content"] == "cdc-data"
     assert state["ide_content"]["t1"][0]["content"] == "ide-data"
-    assert len(state["cdc_checkpoint_diffs"]) == 1
-    assert len(state["ide_checkpoint_diffs"]) == 1
+    assert [d["sequenceNumber"] for d in (d_cdc, d_ide)] == [1, 2]
 
 
 def test_ctx_provider_stamped_with_seq():

@@ -2,15 +2,21 @@
 
 These pin the semantic contract the reference implements imperatively:
 idempotent replay, permutation-invariance, last-write-wins vs __start__
-accumulation, and monotone sequence numbers.
+accumulation, monotone sequence numbers, an input document the transition
+leaves untouched, and a state row whose size does not grow with the
+session's age.
 """
 
 from __future__ import annotations
+
+import copy
+import json
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cdc_agents_data_stream_spark.operators.merge import transition
+from cdc_agents_data_stream_spark.plans.backfill import doc_to_state_row
 
 TASKS = ["a", "b", "with__start__"]
 
@@ -100,3 +106,35 @@ def test_lww_and_start_accumulation(batch_list):
     for task, items in doc["cdc_content"].items():
         got = sorted((i["timestamp"], i["content"]) for i in items)
         assert got == sorted(stored[task])
+
+
+@settings(max_examples=60, deadline=None)
+@given(batches, st.booleans())
+def test_transition_leaves_input_unmodified(batch_list, with_ctx):
+    """The transition copies only what it changes; the caller's document
+    (content lists, ctx list, items) equals its pre-call snapshot."""
+    providers = [lambda doc: {"type": "environment", "sessionId": doc["session_id"]}]
+    doc = None
+    for batch in batch_list:
+        snapshot = copy.deepcopy(doc)
+        new_doc, _ = transition(
+            doc, "s", [_item(*t) for t in batch], source="cdc",
+            ctx_providers=providers if with_ctx else None,
+        )
+        assert doc == snapshot
+        doc = new_doc
+
+
+def test_state_row_size_bounded_in_session_age():
+    """One session, 1000 ticks of fixed-size last-write-wins content, every
+    tick a real change: the serialized state row at seq 1000 is at most
+    1.1x its size at seq 10 (diff history is in the diff log, not the row)."""
+    tasks = [f"task-{k}" for k in range(5)]
+    doc, sizes = None, {}
+    for tick in range(1, 1001):
+        items = [_item(t, tick, f"tick {tick:06d} {t}\n" + "x" * 200) for t in tasks]
+        doc, diff = transition(doc, "s", items, source="cdc")
+        assert diff is not None and doc["sequence_number"] == tick
+        if tick in (10, 1000):
+            sizes[tick] = len(json.dumps(doc_to_state_row(doc, 0)))
+    assert sizes[1000] <= 1.1 * sizes[10], sizes

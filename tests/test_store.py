@@ -26,8 +26,6 @@ def _row(sid: str, seq: int = 1):
         "ide_content": "{}",
         "metadata": "{}",
         "ctx": "[]",
-        "cdc_checkpoint_diffs": "[]",
-        "ide_checkpoint_diffs": "[]",
         "updated_ts_millis": 1000 + seq,
     }
 

@@ -72,8 +72,6 @@ def _state_df(spark, ids):
         F.lit(None).cast("string").alias("ide_content"),
         F.lit("{}").alias("metadata"),
         F.lit("[]").alias("ctx"),
-        F.lit("[]").alias("cdc_checkpoint_diffs"),
-        F.lit("[]").alias("ide_checkpoint_diffs"),
         F.lit(1706600000000).cast("long").alias("updated_ts_millis"),
     )
 
@@ -93,8 +91,6 @@ def _load_df(spark, n):
         F.lit(None).cast("string").alias("ide_content"),
         F.lit("{}").alias("metadata"),
         F.lit("[]").alias("ctx"),
-        F.lit("[]").alias("cdc_checkpoint_diffs"),
-        F.lit("[]").alias("ide_checkpoint_diffs"),
         F.lit(1706600000000).cast("long").alias("updated_ts_millis"),
     )
 
