@@ -24,6 +24,25 @@ The diff algorithm here is ``difflib.SequenceMatcher`` (autojunk off), which
 reproduces the reference's java-diff-utils Myers hunks on the full golden
 corpus (tests/fixtures/diffservice); a property test additionally checks that
 applying the ops reconstructs the target.
+
+Two shortcuts keep the kernel cheap and its output byte-identical:
+
+- A task whose concatenated text is equal on both sides is dropped before
+  canonicalizing: equal text canonicalizes to equal lines, whose diff is
+  empty, and empty tasks are dropped anyway. This covers every task a
+  checkpoint did not touch and the stale (X3) and replayed checkpoints.
+- ``SequenceMatcher`` splits the problem at the longest common run,
+  ties going to the earliest start in ``a`` and then in ``b``; with no
+  junk, each split only looks at its own sub-ranges. Let ``p > 0`` be the
+  common prefix length. If no common run is longer than ``p``, the first
+  split is exactly ``(0, 0, p)``: a run of length ``p`` starting at
+  ``(0, 0)`` wins every tie. Nothing is left to its left, so the remaining
+  opcodes are those of ``a[p:]`` against ``b[p:]``, shifted by ``p``. A run
+  longer than ``p`` covers some ``i`` of ``a`` with ``i % (p + 1) == 0``,
+  so extending each match ``a[i] == b[j]`` at those anchors proves or
+  refutes the premise. When it is refuted, or checking it would cost more
+  than a linear pass, the full matcher runs as before.
+  ``tests/test_diffkernel.py`` pins both against the plain matcher.
 """
 
 from __future__ import annotations
@@ -46,11 +65,56 @@ def _remove(start: int, count: int) -> dict[str, Any]:
     return {"type": REMOVE, "linesRemoved": {"start": start, "end": count}, "lines": []}
 
 
+def _prefix_is_first_block(a: list[str], b: list[str], p: int) -> bool:
+    """True when no common run of ``a`` and ``b`` is longer than ``p``.
+
+    Any run of length ``p + 1`` covers an index ``i`` of ``a`` with
+    ``i % (p + 1) == 0``, so only those anchors are extended, and only until
+    the run through them passes ``p``. Also False when checking the anchors
+    would cost more than a linear pass."""
+    step, la, lb = p + 1, len(a), len(b)
+    anchors = {a[i] for i in range(0, la, step)}
+    where: dict[str, list[int]] = {}
+    for j, line in enumerate(b):
+        if line in anchors:
+            where.setdefault(line, []).append(j)
+    budget = 2 * (la + lb)
+    for i in range(0, la, step):
+        for j in where.get(a[i], ()):
+            # the run through (i, j) is a[i - back + 1 : i + fwd]
+            back = 1
+            while back < step and back <= i and back <= j and a[i - back] == b[j - back]:
+                back += 1
+            fwd = 1
+            while back + fwd <= step and i + fwd < la and j + fwd < lb and a[i + fwd] == b[j + fwd]:
+                fwd += 1
+            budget -= back + fwd
+            if back + fwd - 1 > p or budget < 0:
+                return False
+    return True
+
+
+def _opcodes(a: list[str], b: list[str]) -> list[tuple[str, int, int, int, int]]:
+    """``SequenceMatcher(a=a, b=b, autojunk=False).get_opcodes()``, with the
+    common prefix split off first whenever that provably leaves the result
+    unchanged (see the module docstring)."""
+    p, n = 0, min(len(a), len(b))
+    while p < n and a[p] == b[p]:
+        p += 1
+    if p == len(a) == len(b):
+        return [("equal", 0, p, 0, p)] if p else []
+    if p == 0 or not _prefix_is_first_block(a, b, p):
+        return difflib.SequenceMatcher(a=a, b=b, autojunk=False).get_opcodes()
+    tail = difflib.SequenceMatcher(a=a[p:], b=b[p:], autojunk=False).get_opcodes()
+    return [("equal", 0, p, 0, p)] + [
+        (tag, i1 + p, i2 + p, j1 + p, j2 + p) for tag, i1, i2, j1, j2 in tail
+    ]
+
+
 def diff_lines(before: list[str], after: list[str]) -> list[dict[str, Any]]:
     """Line-level diff → list of change ops in source order."""
-    sm = difflib.SequenceMatcher(a=before, b=after, autojunk=False)
     ops: list[dict[str, Any]] = []
-    for tag, i1, i2, j1, j2 in sm.get_opcodes():
+    for tag, i1, i2, j1, j2 in _opcodes(before, after):
         if tag == "equal":
             continue
         if tag == "replace":
@@ -106,9 +170,12 @@ def diff_task_maps(
             ]
         else:
             prev_items, curr_items = previous[key], current[key]
+            prev_text, curr_text = _concat_sorted(prev_items), _concat_sorted(curr_items)
+            if prev_text == curr_text:
+                continue  # equal text canonicalizes to equal lines: no changes
             max_ts = max(it["timestamp"] for it in list(prev_items) + list(curr_items))
-            before = canonicalize_lines(_concat_sorted(prev_items))
-            after = canonicalize_lines(_concat_sorted(curr_items))
+            before = canonicalize_lines(prev_text)
+            after = canonicalize_lines(curr_text)
             changes = [{"change": op, "timestamp": max_ts} for op in diff_lines(before, after)]
         if changes:
             diff_data[key] = {"taskId": key, "changes": changes}

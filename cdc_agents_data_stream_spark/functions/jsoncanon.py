@@ -14,6 +14,11 @@ This module reproduces that observable behavior:
 - empty object/array print as ``{ }`` / ``[ ]``;
 - key order is preserved (Jackson reads into LinkedHashMap).
 
+Keys and str/int/bool/null scalars are printed by the same calls
+``json.dumps(v, ensure_ascii=False)`` makes for them (see ``_scalar``), so
+the bytes equal the per-scalar ``json.dumps`` form; floats still go through
+``json.dumps``.
+
 Exact byte-parity with Jackson only matters for hunk positions of real JSON
 payloads; the golden diff fixtures exercise the non-JSON fallback path.
 """
@@ -21,6 +26,7 @@ payloads; the golden diff fixtures exercise the non-JSON fallback path.
 from __future__ import annotations
 
 import json
+import json.encoder
 from typing import Any
 
 LINE_SEP = "\n"
@@ -38,22 +44,50 @@ def java_split_lines(s: str, sep: str = LINE_SEP) -> list[str]:
     return parts
 
 
+# ``json.dumps(s, ensure_ascii=False)`` on a str returns
+# ``JSONEncoder.encode(s)``, which is exactly this call (the C encoder when
+# the interpreter has it); null/true/false are literals and ints go through
+# ``int.__repr__`` in the C encoder, so calling these directly prints the
+# same bytes without building an encoder per scalar. Floats (NaN, ±Infinity,
+# repr rounding) and anything else still take ``json.dumps`` itself.
+_encode_str = json.encoder.encode_basestring
+
+
 def _scalar(v: Any) -> str:
+    if v is None:
+        return "null"
+    if v is True:
+        return "true"
+    if v is False:
+        return "false"
+    if isinstance(v, str):
+        return _encode_str(v)
+    if isinstance(v, int):
+        return int.__repr__(v)
     return json.dumps(v, ensure_ascii=False)
 
 
 def _pretty(v: Any, depth: int) -> str:
-    pad = "  " * (depth + 1)
-    close_pad = "  " * depth
+    # str members are encoded inline: they are most of a checkpoint's values
     if isinstance(v, dict):
         if not v:
             return "{ }"
-        entries = [f'{pad}{json.dumps(str(k), ensure_ascii=False)} : {_pretty(val, depth + 1)}' for k, val in v.items()]
-        return "{" + LINE_SEP + ("," + LINE_SEP).join(entries) + LINE_SEP + close_pad + "}"
+        inner = depth + 1
+        pad = "  " * inner
+        entries = [
+            pad
+            + _encode_str(str(k))
+            + " : "
+            + (_encode_str(val) if type(val) is str else _pretty(val, inner))
+            for k, val in v.items()
+        ]
+        return "{" + LINE_SEP + ("," + LINE_SEP).join(entries) + LINE_SEP + "  " * depth + "}"
     if isinstance(v, list):
         if not v:
             return "[ ]"
-        return "[ " + ", ".join(_pretty(item, depth + 1) for item in v) + " ]"
+        inner = depth + 1
+        items = [_encode_str(item) if type(item) is str else _pretty(item, inner) for item in v]
+        return "[ " + ", ".join(items) + " ]"
     return _scalar(v)
 
 

@@ -187,17 +187,20 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def _pair_jaccard(sh: DataFrame, candidates: DataFrame | None = None) -> DataFrame:
+def _pair_jaccard(
+    sh: DataFrame, candidates: DataFrame | None = None, sizes_carried: bool = False
+) -> DataFrame:
     """Exact Jaccard over a shingle index; optionally restricted to
     candidate (doc_a, doc_b) pairs.
 
-    When ``candidates`` already carries ``sz_a``/``sz_b`` (the size-carry
-    form: per-doc set sizes computed as a free extra aggregate in
+    ``sizes_carried=True`` says ``candidates`` carries ``sz_a``/``sz_b`` (the
+    size-carry form: per-doc set sizes computed as a free extra aggregate in
     ``minhash_signatures(with_size=True)`` and ridden through the band
-    self-join), the sizes aggregation + two joins are skipped entirely —
+    self-join); the sizes aggregation + two joins are then skipped entirely —
     the shingle input's only remaining consumers are the two intersection
-    sides."""
-    if candidates is not None and "sz_a" in candidates.columns:
+    sides. Without it, sizes are recomputed from ``sh`` whatever columns
+    ``candidates`` has."""
+    if candidates is not None and sizes_carried:
         a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
         b_sh = sh.select(F.col("doc_id").alias("b_doc"), F.col("shingle").alias("b_shingle"))
         return (
@@ -390,7 +393,9 @@ def minhash_lsh_pairs(
     # consumer re-runs the semi-join's full corpus scan. The checkpoint is
     # candidate-docs × shingles (banding keeps it tiny), so the verify
     # scans the corpus once instead of twice.
-    return _pair_jaccard(sh_cand, candidates).filter(F.col("jaccard") >= threshold)
+    return _pair_jaccard(sh_cand, candidates, sizes_carried=True).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def minhash_lsh_incremental(
@@ -597,7 +602,7 @@ def minhash_lsh_incremental(
         sh_new.unionByName(sh_hist).join(cand_docs, id_col, "left_semi")
     )
     return (
-        _pair_jaccard(sh_cand, candidates)
+        _pair_jaccard(sh_cand, candidates, sizes_carried=with_size)
         .filter(F.col("jaccard") >= threshold)
         .select(
             F.col("doc_a").alias("doc_new"),

@@ -103,18 +103,6 @@ def latest_checkpoints_reference_rank(writes: DataFrame, checkpoints: DataFrame)
     )
 
 
-def latest_checkpoint_for(writes: DataFrame, checkpoints: DataFrame, thread_id: str, task_path: str) -> DataFrame:
-    """W1 point lookup (dao/CdcCheckpointDao.java:60-90): latest pointer for
-    one (thread_id, task_path). Filters are pushed to the scan."""
-    j = joined_writes(writes, checkpoints).filter(
-        (F.col("thread_id") == thread_id) & (F.col("task_path") == task_path)
-    )
-    return j.groupBy("thread_id", "task_path").agg(
-        F.max_by(F.col("checkpoint_id"), _ORD()).alias("checkpoint_id"),
-        F.max(F.col("ts_millis")).alias("ts_millis"),
-    )
-
-
 def latest_blobs_per_task(
     writes: DataFrame, checkpoints: DataFrame, broadcast_writes: bool = False
 ) -> DataFrame:

@@ -29,18 +29,6 @@ DECODED_SCHEMA = "doc_id long, width int, height int, n_frames int, fmt string"
 CHUNK_BYTES = 256
 
 
-def to_binary_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Re-type documents as multimodal rows: payload bytes + metadata."""
-    return df.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
-        F.struct(
-            F.octet_length(F.col(text_col)).alias("n_bytes"),
-            F.lit("text/plain").alias("mime"),
-        ).alias("meta"),
-    )
-
-
 def binary_meta(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Byte-level metadata over the payload, all JVM-side expressions."""
     payload = F.encode(F.col(text_col), "UTF-8")

@@ -65,6 +65,21 @@ def doc_to_state_row(doc: dict[str, Any], updated_ts_millis: int) -> dict[str, A
     }
 
 
+def diff_log_row(
+    session_id: str, diff: dict[str, Any], source: str, ts_millis: int
+) -> dict[str, Any]:
+    """The diff-log row of one transition's diff document (what
+    ``ParquetAppendLog.append_rows`` takes); ``diff_data`` is the compact
+    JSON of ``diffData``."""
+    return {
+        "session_id": session_id,
+        "sequence_number": int(diff["sequenceNumber"]),
+        "source": source,
+        "diff_data": json.dumps(diff["diffData"], separators=(",", ":")),
+        "ts_millis": ts_millis,
+    }
+
+
 def make_transition_rows_fn(source: str, ctx_providers=None, now_ms: int | None = None):
     """Per-session state transition for the Arrow path: takes
     ``(session_id, rows)`` where ``rows`` is a list of plain dicts (Arrow
@@ -227,23 +242,18 @@ def apply_transition_batch(
             # bounded: guarded by n <= small_result_max_rows (counted above)
             rows = [r.asDict() for r in updated.collect()]
             if diff_log is not None:
-                diff_rows = []
-                for r in rows:
-                    if r["batch_diff"] is None:
-                        continue
-                    diff = json.loads(r["batch_diff"])
-                    diff_rows.append(
-                        {
-                            "session_id": r["session_id"],
-                            "sequence_number": int(diff["sequenceNumber"]),
-                            "source": source,
-                            "diff_data": json.dumps(
-                                diff["diffData"], separators=(",", ":")
-                            ),
-                            "ts_millis": r["updated_ts_millis"],
-                        }
-                    )
-                diff_log.append_rows(diff_rows)
+                diff_log.append_rows(
+                    [
+                        diff_log_row(
+                            r["session_id"],
+                            json.loads(r["batch_diff"]),
+                            source,
+                            r["updated_ts_millis"],
+                        )
+                        for r in rows
+                        if r["batch_diff"] is not None
+                    ]
+                )
             state_store.upsert_rows(
                 [{k: v for k, v in r.items() if k != "batch_diff"} for r in rows]
             )

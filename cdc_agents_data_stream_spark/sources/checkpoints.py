@@ -3,7 +3,8 @@
 The reference scans Postgres via JDBC with hand-written SQL
 (dao/CdcCheckpointDao.java:60-187, dao/IdeCheckpointDao.java:58-177); here
 the same tables are exposed as DataFrames from parquet paths (lake mode) or
-a JDBC source (live mode), and all predicates are left to Catalyst pushdown.
+a JDBC source (live mode, ``sources/incremental.py``), and all predicates
+are left to Catalyst pushdown.
 
 Event time lives INSIDE the jsonb ``checkpoints.checkpoint`` column
 ($.ts — dao/CdcCheckpointDao.java:67) for the CDC stream, and in the text
@@ -20,16 +21,6 @@ from pyspark.sql import functions as F
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def read_jdbc_table(spark: SparkSession, url: str, table: str, **options) -> DataFrame:
-    """Live-Postgres mode: Catalyst pushes filters/projection into the JDBC
-    scan. Partition the read on a numeric/hash column for parallelism when
-    the table is large."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def with_event_time(checkpoints: DataFrame) -> DataFrame:

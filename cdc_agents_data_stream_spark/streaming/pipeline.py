@@ -49,7 +49,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.merge import transition
-from ..plans.backfill import apply_transition_batch, doc_to_state_row, state_row_to_doc
+from ..plans.backfill import (
+    apply_transition_batch,
+    diff_log_row,
+    doc_to_state_row,
+    state_row_to_doc,
+)
 from ..schemas import CHECKPOINT_WRITES_SCHEMA
 from ..state.store import ParquetAppendLog, ParquetStateStore
 
@@ -190,15 +195,7 @@ def run_foreachbatch_pipeline(
             )
             state_rows.append(doc_to_state_row(doc, now_ms))
             if diff is not None:
-                diff_rows.append(
-                    {
-                        "session_id": sid,
-                        "sequence_number": int(diff["sequenceNumber"]),
-                        "source": source,
-                        "diff_data": json.dumps(diff["diffData"], separators=(",", ":")),
-                        "ts_millis": now_ms,
-                    }
-                )
+                diff_rows.append(diff_log_row(sid, diff, source, now_ms))
         diff_log.append_rows(diff_rows)
         state_store.upsert_rows(state_rows)
 

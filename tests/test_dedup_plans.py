@@ -272,3 +272,19 @@ def test_recall_ppm_zero_truth_yields_null_not_error(spark):
     ).fetchone()
     assert spark_row["recall_ppm"] is None
     assert duck_row[0] is None
+
+
+def test_pair_jaccard_recomputes_sizes_unless_told_they_are_carried(spark):
+    """A candidates frame with an unrelated ``sz_a``/``sz_b`` column takes
+    the sizes from the shingles unless the caller says they are carried."""
+    from cdc_agents_data_stream_spark.operators.dedup import _pair_jaccard
+
+    sh = spark.createDataFrame(
+        [(1, "x"), (1, "y"), (1, "z"), (2, "y"), (2, "z"), (2, "w")], "doc_id long, shingle string"
+    )
+    # |{x,y,z} ∩ {y,z,w}| = 2, union 4; the bogus sizes would give 2/(9+9-2)
+    cands = spark.createDataFrame([(1, 2, 9, 9)], "doc_a long, doc_b long, sz_a long, sz_b long")
+    recomputed = _pair_jaccard(sh, cands).collect()  # bounded: one pair
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in recomputed] == [(1, 2, 0.5)]
+    carried = _pair_jaccard(sh, cands, sizes_carried=True).collect()  # bounded: one pair
+    assert [r.jaccard for r in carried] == [0.125]

@@ -442,15 +442,21 @@ def test_pagerank_bucketed_job_growth_is_linear(pr_bucketed_graph):
     from cdc_agents_data_stream_spark.operators import graph as G
 
     spark = pr_bucketed_graph[0]
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
 
-    def n_jobs() -> int:
-        return len(tracker.getJobIdsForGroup(None) or [])
+    def n_jobs(iterations: int) -> int:
+        # jobs counted in a group of their own: the status tracker keeps
+        # only the newest spark.ui.retainedJobs jobs, so a count over all
+        # jobs of a long test session drops when older jobs are evicted
+        group = f"pagerank_job_growth_{iterations}"
+        sc.setJobGroup(group, "pagerank job count")
+        try:
+            G.pagerank_bucketed(spark, "pr_shape", iterations=iterations)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    base = n_jobs()
-    G.pagerank_bucketed(spark, "pr_shape", iterations=2)
-    j2 = n_jobs() - base
-    G.pagerank_bucketed(spark, "pr_shape", iterations=6)
-    j6 = n_jobs() - base - j2
+    j2 = n_jobs(2)
+    j6 = n_jobs(6)
     per_round = (j6 - j2) / 4
     assert per_round <= 4, (j2, j6)  # measured: ~2 jobs/round
