@@ -10,8 +10,9 @@ the concurrently-produced diff gets.
 
 Here a provider is a plain callable ``state_doc -> ctx_item | None``
 passed into the state transition (operators/merge.py ``transition``); it
-executes inside the keyed ``applyInPandas`` / ``applyInPandasWithState``
-group, i.e. distributed per session, never in a driver loop. The
+executes inside ``streaming.pipeline.absorb``, once per session per
+batch: in the keyed ``mapInArrow`` / ``applyInPandasWithState`` group,
+or in the driver fast path for small batches. The
 reference's advisory lock around file consumption
 (TestReportContextProvider.java:45-61) is unnecessary: a session key is
 owned by exactly one task per micro-batch (X8), so reads are already

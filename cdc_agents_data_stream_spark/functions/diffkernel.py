@@ -147,10 +147,11 @@ def diff_task_maps(
 
     Input items are ``{"content": str, "timestamp": sortable}``. Returns
     ``{"sequenceNumber": n, "diffData": {task: {"taskId", "changes"}}}`` or
-    ``None`` when no task changed.
+    ``None`` when no task changed. Tasks appear in sorted key order, so the
+    document's bytes do not depend on the process's string-hash seed.
     """
     diff_data: dict[str, Any] = {}
-    for key in set(previous) | set(current):
+    for key in sorted(set(previous) | set(current)):
         if key not in previous:
             changes = [
                 {

@@ -1,8 +1,10 @@
 """Per-session state-document merge policy and transition function.
 
-Pure Python on plain dicts — this is the keyed-state transition used by both
-the batch backfill (``groupBy(session).applyInPandas``) and the streaming
-pipeline (``applyInPandasWithState``). Keeping it pure makes the semantics
+Pure Python on plain dicts — this is the keyed-state transition behind
+``streaming.pipeline.absorb``, the one adapter every execution path calls:
+the streaming pipeline's driver fast path, the backfill's
+``repartition(session)`` + ``mapInArrow`` transition, and
+``applyInPandasWithState``. Keeping it pure makes the semantics
 unit-testable without a JVM.
 
 Reference semantics:

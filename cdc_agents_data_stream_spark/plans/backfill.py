@@ -8,17 +8,16 @@ distributed plan:
 
     writes ⋈ checkpoints → latest blob per (thread, task)      [2 shuffles]
       → left join prior state on session_id                    [1 shuffle]
-      → groupBy(session).applyInPandas(state transition)       [co-partitioned]
+      → repartition(session) + mapInArrow(``absorb`` per session)
       → MERGE into state store + append diffs
 
-Per-key ordering (X8) is free: a session lives in exactly one partition of
-the ``applyInPandas`` stage, so the read-modify-write is serial per key
+Per-key ordering (X8) is free: a session's rows all hash to one partition
+of the ``mapInArrow`` stage, so the read-modify-write is serial per key
 without any locks.
 """
 
 from __future__ import annotations
 
-import json
 import time
 from typing import Any
 
@@ -28,105 +27,19 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..operators.latest import ide_latest_blobs_per_task, latest_blobs_per_task
-from ..operators.merge import transition
 from ..schemas import DATA_STREAM_STATE_SCHEMA
 from ..state.store import ParquetAppendLog, ParquetStateStore
+from ..streaming.pipeline import absorb, diff_log_row
 
-# applyInPandas output: the full state row plus the (nullable) diff produced
-# by this batch, denormalized so one grouped pass feeds both sinks.
+# mapInArrow output: the full state row plus the (nullable) ``diff_data``
+# ``absorb`` printed for this batch, denormalized so one pass feeds both sinks.
 _TRANSITION_OUTPUT = (
     "session_id string, sequence_number int, cdc_content string, "
     "ide_content string, metadata string, ctx string, "
-    "updated_ts_millis long, batch_diff string"
+    "updated_ts_millis long, diff_data string"
 )
-
-
-def state_row_to_doc(row: dict[str, Any]) -> dict[str, Any]:
-    """Inflate a persisted state-table row into the dict state document."""
-    return {
-        "session_id": row["session_id"],
-        "sequence_number": int(row["sequence_number"]),
-        "cdc_content": json.loads(row["cdc_content"] or "{}"),
-        "ide_content": json.loads(row["ide_content"] or "{}"),
-        "metadata": json.loads(row["metadata"] or "{}"),
-        "ctx": json.loads(row["ctx"] or "[]"),
-    }
-
-
-def doc_to_state_row(doc: dict[str, Any], updated_ts_millis: int) -> dict[str, Any]:
-    return {
-        "session_id": doc["session_id"],
-        "sequence_number": int(doc["sequence_number"]),
-        "cdc_content": json.dumps(doc["cdc_content"]),
-        "ide_content": json.dumps(doc["ide_content"]),
-        "metadata": json.dumps(doc.get("metadata") or {}),
-        "ctx": json.dumps(doc.get("ctx") or []),
-        "updated_ts_millis": updated_ts_millis,
-    }
-
-
-def diff_log_row(
-    session_id: str, diff: dict[str, Any], source: str, ts_millis: int
-) -> dict[str, Any]:
-    """The diff-log row of one transition's diff document (what
-    ``ParquetAppendLog.append_rows`` takes); ``diff_data`` is the compact
-    JSON of ``diffData``."""
-    return {
-        "session_id": session_id,
-        "sequence_number": int(diff["sequenceNumber"]),
-        "source": source,
-        "diff_data": json.dumps(diff["diffData"], separators=(",", ":")),
-        "ts_millis": ts_millis,
-    }
-
-
-def make_transition_rows_fn(source: str, ctx_providers=None, now_ms: int | None = None):
-    """Per-session state transition for the Arrow path: takes
-    ``(session_id, rows)`` where ``rows`` is a list of plain dicts (Arrow
-    nulls arrive as ``None``): thread_id, task_id, content, ts_millis,
-    checkpoint_id, plus the prior state row columns (null when the session
-    is new). Returns ONE output dict: the new state row plus ``batch_diff``,
-    the JSON of this batch's diff (None when nothing changed).
-    ``ctx_providers`` (UD5) run inside the group — distributed per session,
-    consume-once side inputs stay serialized per key (X8/X9).
-
-    ``now_ms`` is the single batch timestamp stamped on every state row —
-    passed in (not read per group) so replaying a batch writes
-    byte-identical rows; the small-batch driver path uses one ``now_ms``
-    the same way. Prior-row columns outside ``DATA_STREAM_STATE_SCHEMA``
-    (the diff-history columns of stores written before diffs left the
-    state row) are ignored."""
-    batch_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-    state_fields = DATA_STREAM_STATE_SCHEMA.fieldNames()
-
-    def fn(session_id: str, rows: list[dict[str, Any]]) -> dict[str, Any]:
-        first = rows[0]
-        prior = None
-        if first.get("sequence_number") is not None:
-            raw = {
-                c: (first[c] if isinstance(first.get(c), str) else None)
-                for c in state_fields
-            }
-            raw["session_id"] = session_id
-            raw["sequence_number"] = int(first["sequence_number"])
-            prior = state_row_to_doc(raw)
-        items = [
-            {
-                "task_id": r["task_id"],
-                "content": r["content"],
-                "timestamp": int(r["ts_millis"]),
-                "thread_id": session_id,
-                "checkpoint_id": r["checkpoint_id"],
-            }
-            for r in rows
-            if r["task_id"] is not None
-        ]
-        doc, diff = transition(prior, session_id, items, source=source, ctx_providers=ctx_providers)
-        out = doc_to_state_row(doc, batch_ms)
-        out["batch_diff"] = json.dumps(diff) if diff is not None else None
-        return out
-
-    return fn
+# rows per emitted Arrow batch: bounds the transition's output memory
+_OUT_BATCH_ROWS = 1024
 
 
 def _run_transition(
@@ -171,7 +84,7 @@ def _run_transition(
     enriched = latest.withColumnRenamed("thread_id", "session_id").join(
         state_df, "session_id", "left"
     )
-    fn = make_transition_rows_fn(source, ctx_providers, now_ms)
+    batch_ms = now_ms if now_ms is not None else int(time.time() * 1000)
     out_schema = to_arrow_schema(StructType.fromDDL(_TRANSITION_OUTPUT))
 
     def per_partition(batches):
@@ -183,10 +96,17 @@ def _run_transition(
         for batch in batches:
             for row in batch.to_pylist():
                 groups.setdefault(row["session_id"], []).append(row)
-        out_rows = [fn(sid, rows) for sid, rows in groups.items()]
-        # chunked emission bounds the Arrow batch size for huge partitions
-        for i in range(0, len(out_rows), 1024):
-            yield pa.RecordBatch.from_pylist(out_rows[i : i + 1024], schema=out_schema)
+        out: list[dict[str, Any]] = []
+        for sid, rows in groups.items():
+            # every row carries the joined prior state; null seq = new session
+            prior = rows[0] if rows[0]["sequence_number"] is not None else None
+            state_row, diff_row = absorb(sid, prior, rows, source, batch_ms, ctx_providers)
+            out.append({**state_row, "diff_data": diff_row and diff_row["diff_data"]})
+            if len(out) == _OUT_BATCH_ROWS:
+                yield pa.RecordBatch.from_pylist(out, schema=out_schema)
+                out = []
+        if out:
+            yield pa.RecordBatch.from_pylist(out, schema=out_schema)
 
     return enriched.repartition("session_id").mapInArrow(
         per_partition, schema=_TRANSITION_OUTPUT
@@ -243,34 +163,22 @@ def apply_transition_batch(
             rows = [r.asDict() for r in updated.collect()]
             if diff_log is not None:
                 diff_log.append_rows(
-                    [
-                        diff_log_row(
-                            r["session_id"],
-                            json.loads(r["batch_diff"]),
-                            source,
-                            r["updated_ts_millis"],
-                        )
-                        for r in rows
-                        if r["batch_diff"] is not None
-                    ]
+                    [diff_log_row(r, source, r["diff_data"]) for r in rows if r["diff_data"] is not None]
                 )
-            state_store.upsert_rows(
-                [{k: v for k, v in r.items() if k != "batch_diff"} for r in rows]
-            )
+            state_store.upsert_rows(rows)  # takes the state columns only
         else:
             if diff_log is not None:
-                diffs = (
-                    updated.filter(F.col("batch_diff").isNotNull())
-                    .select(
-                        F.col("session_id"),
-                        F.get_json_object("batch_diff", "$.sequenceNumber").cast("int").alias("sequence_number"),
+                # ``diff_log_row`` as a projection: columns move, bytes do not change
+                diff_log.append(
+                    updated.filter(F.col("diff_data").isNotNull()).select(
+                        "session_id",
+                        "sequence_number",
                         F.lit(source).alias("source"),
-                        F.get_json_object("batch_diff", "$.diffData").alias("diff_data"),
+                        "diff_data",
                         F.col("updated_ts_millis").alias("ts_millis"),
                     )
                 )
-                diff_log.append(diffs)
-            state_store.upsert(updated.drop("batch_diff"))
+            state_store.upsert(updated.drop("diff_data"))
     finally:
         updated.unpersist()
     return n

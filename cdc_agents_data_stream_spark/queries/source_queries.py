@@ -75,16 +75,16 @@ def backfill_state_build(spark, sf_dir):
     backfill plan runs (plans/backfill.py::backfill; reference
     config/CdcSubscriberConfig.java:117-175) — scan → F1/F5 filter → J1
     join → A1 latest-per-(thread,task) → left-join prior state (empty
-    here) → partition-batched ``mapInPandas`` state transition — then the
+    here) → partition-batched ``mapInArrow`` state transition — then the
     resulting state documents are cracked back open for the oracle:
     one row per (session, task) with the absorbed content, the session's
     sequence number (must be 1: first absorbing batch, X6) and its diff-doc
     count (must be 1: one diff doc per absorbing batch, X5), read from the
     batch's returned diff — diffs are not kept in the state row.
 
-    ``updated_ts_millis``/``batch_diff`` are dropped — wall-clock stamps
-    are the one non-deterministic state field (documented replay caveat,
-    plans/backfill.py:102)."""
+    ``updated_ts_millis``/``diff_data`` are dropped — the wall-clock stamp
+    is the one non-deterministic state field (a replay passes the batch's
+    ``now_ms``; see ``streaming.pipeline.absorb``)."""
     from ..plans.backfill import _run_transition
     from ..schemas import DATA_STREAM_STATE_SCHEMA
 
@@ -101,7 +101,7 @@ def backfill_state_build(spark, sf_dir):
             "session_id",
             F.col("sequence_number").cast("long").alias("seq"),
             # the prior state is empty, so this batch's diff is the whole history
-            F.when(F.col("batch_diff").isNotNull(), 1).otherwise(0).cast("long").alias("n_diffs"),
+            F.when(F.col("diff_data").isNotNull(), 1).otherwise(0).cast("long").alias("n_diffs"),
             F.explode(content).alias("task_id", "items"),
         )
         .select(
@@ -696,7 +696,7 @@ QUERIES["applog_write_roundtrip"] = Q(
 def difflog_replay_equivalence(spark, sf_dir):
     """Event-sourcing invariant, machine-checked per session: replaying
     the diff docs the two absorbing batches emitted (X5; each pass's
-    ``batch_diff``, what the diff log receives) from an empty map must
+    ``diff_data``, what the diff log receives) from an empty map must
     reconstruct EXACTLY the final absorbed content — i.e. the diff
     log alone is sufficient to rebuild state (the property the
     reference's DiffServiceTest replay helper pins per kernel call,
@@ -717,8 +717,8 @@ def difflog_replay_equivalence(spark, sf_dir):
     empty_state = spark.createDataFrame([], DATA_STREAM_STATE_SCHEMA)
     s1 = _run_transition(latest_blobs_per_task(w1, c1), empty_state, "cdc")
     s2 = _run_transition(
-        latest_blobs_per_task(w2, c2), s1.drop("batch_diff"), "cdc", broadcast_state=True
-    ).join(s1.select("session_id", F.col("batch_diff").alias("diff_1")), "session_id", "left")
+        latest_blobs_per_task(w2, c2), s1.drop("diff_data"), "cdc", broadcast_state=True
+    ).join(s1.select("session_id", F.col("diff_data").alias("diff_1")), "session_id", "left")
 
     import json as _json
 
@@ -728,10 +728,11 @@ def difflog_replay_equivalence(spark, sf_dir):
         for pdf in batches:
             out = []
             for r in pdf.itertuples():
-                diffs = [_json.loads(d) for d in (r.diff_1, r.batch_diff) if d is not None]
+                # pass order is sequence order
+                diffs = [_json.loads(d) for d in (r.diff_1, r.diff_data) if d is not None]
                 task_lines: dict = {}
-                for doc in sorted(diffs, key=lambda d: d["sequenceNumber"]):
-                    for task, td in (doc.get("diffData") or {}).items():
+                for diff_data in diffs:
+                    for task, td in diff_data.items():
                         ops = [c["change"] for c in td["changes"]]
                         task_lines[task] = apply_ops(task_lines.get(task, []), ops)
                 final = _json.loads(r.cdc_content or "{}")

@@ -95,8 +95,14 @@ def test_backfill_replay_is_byte_identical(spark, paths):
 
 def test_backfill_large_result_uses_distributed_merge(spark, paths):
     """Forcing the threshold to 0 exercises the distributed MERGE sink on
-    the same inputs and produces the same state as the driver fast path."""
-    cps_df, writes_df = _write_tables(spark, paths, n_threads=2, n_ticks=3, repeat_tick=None)
+    the same inputs and produces the same state and the same diff-log
+    BYTES as the driver fast path — with several tasks per diff and
+    non-ASCII / U+2028 text, which Spark-side JSON reprinting would write
+    raw where Python escapes it."""
+    cps_df, writes_df = _write_tables(
+        spark, paths, n_threads=2, n_ticks=3, repeat_tick=None,
+        tasks=("0_task", "caf\u00e9 \u2028 task", "2_t\u00e2che__start__"),
+    )
     out = {}
     for name, threshold in (("small", 500), ("large", 0)):
         store = ParquetStateStore(spark, str(paths / f"state-{name}"))
@@ -107,29 +113,28 @@ def test_backfill_large_result_uses_distributed_merge(spark, paths):
         )
         out[name] = {
             "state": sorted(tuple(r) for r in store.read().collect()),
-            "diff_keys": sorted(
-                (r["session_id"], r["sequence_number"], r["source"])
+            "diffs": sorted(
+                (r["session_id"], r["sequence_number"], r["source"], r["diff_data"], r["ts_millis"])
                 for r in log.read().collect()
             ),
         }
     assert out["small"]["state"] == out["large"]["state"]
-    assert out["small"]["diff_keys"] == out["large"]["diff_keys"]
+    assert out["small"]["diffs"] == out["large"]["diffs"]
+    diff_data = out["small"]["diffs"][0][3]
+    assert len(json.loads(diff_data)) == 3
+    assert "caf\\u00e9 \\u2028" in diff_data and diff_data.isascii()
 
 
-def test_transition_rows_fn_matches_transition():
-    """The Arrow path's per-session function is ``transition`` plus the
-    state-row codec and nothing else — for a fresh session (all-None state
-    columns), a session with prior state, a prior row that still carries
-    the diff-history columns of an older store, and rows with a None
-    task_id (the noise rows the filter must drop)."""
+def test_absorb_matches_transition():
+    """``absorb`` is ``transition`` plus the state-row codec and the
+    diff-row builder and nothing else — for a fresh session, a session
+    with prior state, a prior row that still carries the diff-history
+    columns of an older store (and the joined input columns, as the Arrow
+    path passes it), and rows with a None task_id (the noise rows the
+    filter must drop)."""
     from cdc_agents_data_stream_spark.operators.merge import new_state, transition
-    from cdc_agents_data_stream_spark.plans.backfill import (
-        doc_to_state_row,
-        make_transition_rows_fn,
-    )
-    from cdc_agents_data_stream_spark.schemas import DATA_STREAM_STATE_SCHEMA
+    from cdc_agents_data_stream_spark.streaming.pipeline import absorb, doc_to_state_row
 
-    state_cols = DATA_STREAM_STATE_SCHEMA.fieldNames()
     now = 1_700_000_000_000
 
     prior_doc = new_state("s-1")
@@ -140,32 +145,20 @@ def test_transition_rows_fn_matches_transition():
     prior_row = doc_to_state_row(prior_doc, now - 1000)
     legacy_cols = {"cdc_checkpoint_diffs": '[{"sequenceNumber": 3}]',
                    "ide_checkpoint_diffs": "[]"}
-
-    def mk_rows(session_id, prior):
-        base = {c: (prior[c] if prior else None) for c in state_cols}
-        base.pop("updated_ts_millis", None)
-        if prior:
-            base.update({c: prior[c] for c in legacy_cols if c in prior})
-        rows = []
-        for i, task in enumerate(["t1", "t2", None]):
-            r = dict(base)
-            r.update(
-                session_id=session_id,
-                task_id=task,
-                content=f"c-{i}" if task else None,
-                ts_millis=100 + i,
-                checkpoint_id=f"cp-{i}" if task else None,
-            )
-            rows.append(r)
-        return rows
-
-    fn_rows = make_transition_rows_fn("cdc", None, now)
+    rows = [
+        {
+            "task_id": task,
+            "content": f"c-{i}" if task else None,
+            "ts_millis": 100 + i,
+            "checkpoint_id": f"cp-{i}" if task else None,
+        }
+        for i, task in enumerate(["t1", "t2", None])
+    ]
     for sid, prior in (
         ("s-0", None),
         ("s-1", prior_row),
-        ("s-1", {**prior_row, **legacy_cols}),
+        ("s-1", {**prior_row, **legacy_cols, **rows[0]}),
     ):
-        rows = mk_rows(sid, prior)
         items = [
             {"task_id": r["task_id"], "content": r["content"], "timestamp": r["ts_millis"],
              "thread_id": sid, "checkpoint_id": r["checkpoint_id"]}
@@ -173,8 +166,15 @@ def test_transition_rows_fn_matches_transition():
             if r["task_id"] is not None
         ]
         doc, diff = transition(prior_doc if prior else None, sid, items, source="cdc")
-        expected = {**doc_to_state_row(doc, now), "batch_diff": json.dumps(diff)}
-        assert fn_rows(sid, rows) == expected, f"mismatch for {sid}"
+        state_row = doc_to_state_row(doc, now)
+        expected_diff = {
+            "session_id": sid,
+            "sequence_number": diff["sequenceNumber"],
+            "source": "cdc",
+            "diff_data": json.dumps(diff["diffData"], separators=(",", ":")),
+            "ts_millis": now,
+        }
+        assert absorb(sid, prior, rows, "cdc", now) == (state_row, expected_diff), sid
 
 
 def test_diff_content_shape(spark, paths):

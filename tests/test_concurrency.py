@@ -8,6 +8,7 @@ sources by construction."""
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
 import time
@@ -16,10 +17,7 @@ import pandas as pd
 import pytest
 
 from cdc_agents_data_stream_spark.state.store import ParquetAppendLog, ParquetStateStore
-from cdc_agents_data_stream_spark.streaming.pipeline import (
-    run_dual_stream_pipeline,
-    run_foreachbatch_pipeline,
-)
+from cdc_agents_data_stream_spark.streaming.pipeline import run_foreachbatch_pipeline
 from tests.checkpointgen import gen_checkpoint_tables
 
 
@@ -163,58 +161,116 @@ def test_two_live_streams_one_store(spark, tmp_path):
             q.stop()
 
 
-def test_dual_stream_union_pipeline(spark, tmp_path):
-    """X10 in streaming mode: one unioned query fans in cdc + ide for the
-    SAME session; cdc applies before ide within the batch, ide_content and
-    cdc_content land on one state row, and the shared sequence number
-    advances once per absorbing source."""
-    (tmp_path / "writes").mkdir()
-    (tmp_path / "cps").mkdir()
-    (tmp_path / "ide").mkdir()
-    cps, writes = gen_checkpoint_tables(n_threads=1, n_ticks=2, repeat_tick=None)
-    cps.to_parquet(tmp_path / "cps" / "all.parquet")
-    writes.to_parquet(tmp_path / "writes" / "all.parquet")
-    ide = pd.DataFrame(
+@functools.lru_cache(maxsize=1)
+def _dual_tables():
+    # one generation (checkpoint ids are random) shared by every test here
+    return gen_checkpoint_tables(n_threads=1, n_ticks=2, repeat_tick=None)
+
+
+def _stage_dual(base):
+    """One cdc session staged as writes + pointer files, and one IDE
+    checkpoint for the same session."""
+    for d in ("writes", "cps", "ide"):
+        (base / d).mkdir(parents=True)
+    cps, writes = _dual_tables()
+    cps.to_parquet(base / "cps" / "all.parquet")
+    writes.to_parquet(base / "writes" / "all.parquet")
+    _ide_tick(base, 1, "2026-01-01 00:00:05.000", b"ide line1\nide line2")
+
+
+def _ide_tick(base, n: int, ts: str, blob: bytes):
+    pd.DataFrame(
         [
             {
                 "thread_id": "thread-0",
                 "prompt_id": "p1",
                 "session_id": "thread-0",
-                "checkpoint_ts": "2026-01-01 00:00:05.000",
-                "checkpoint_id": "ide-cp-1",
-                "blob": b"ide line1\nide line2",
+                "checkpoint_ts": ts,
+                "checkpoint_id": f"ide-cp-{n}",
+                "blob": blob,
                 "task_path": "ide_task",
             }
         ]
-    )
-    ide.to_parquet(tmp_path / "ide" / "all.parquet")
+    ).to_parquet(base / "ide" / f"tick-{n}.parquet")
+
+
+_DUAL_RESULTS: dict = {}
+
+
+@pytest.mark.parametrize("threshold", [500, 0], ids=["driver", "distributed"])
+def test_dual_stream_union_pipeline(spark, tmp_path, threshold):
+    """X10 in streaming mode: one unioned query fans in cdc + ide for the
+    SAME session; cdc applies before ide within the batch, ide_content and
+    cdc_content land on one state row, and the shared sequence number
+    advances once per absorbing source. The driver path and the
+    distributed path (threshold 0) write identical state rows (but for
+    the batch stamp) and identical dedup'd diff logs."""
+    _stage_dual(tmp_path)
     store = ParquetStateStore(spark, str(tmp_path / "state"))
     log = ParquetAppendLog(spark, str(tmp_path / "diffs"))
-    query = run_dual_stream_pipeline(
+    query = run_foreachbatch_pipeline(
         spark,
         str(tmp_path / "writes"),
         str(tmp_path / "cps"),
-        str(tmp_path / "ide"),
         store,
         log,
         checkpoint_location=str(tmp_path / "ckpt"),
+        small_batch_max_rows=threshold,
+        ide_dir=str(tmp_path / "ide"),
     )
     try:
         query.processAllAvailable()
-        rows = {r["session_id"]: r for r in store.read().collect()}
-        assert set(rows) == {"thread-0"}
-        row = rows["thread-0"]
-        cdc_content = json.loads(row["cdc_content"])
-        ide_content = json.loads(row["ide_content"])
-        assert set(cdc_content) == {"0_task", "1_task", "2_task", "3_task__start__", "4_task"}
-        assert set(ide_content) == {"ide_task"}
-        assert ide_content["ide_task"][0]["content"] == "ide line1\nide line2"
-        # cdc batch -> seq 1, ide batch -> seq 2 (shared monotone counter)
-        assert row["sequence_number"] == 2
-        diffs = log.read(dedup=True).collect()
-        assert {(d["source"], d["sequence_number"]) for d in diffs} == {("cdc", 1), ("ide", 2)}
     finally:
         query.stop()
+    rows = {r["session_id"]: r for r in store.read().collect()}
+    assert set(rows) == {"thread-0"}
+    row = rows["thread-0"]
+    cdc_content = json.loads(row["cdc_content"])
+    ide_content = json.loads(row["ide_content"])
+    assert set(cdc_content) == {"0_task", "1_task", "2_task", "3_task__start__", "4_task"}
+    assert set(ide_content) == {"ide_task"}
+    assert ide_content["ide_task"][0]["content"] == "ide line1\nide line2"
+    # cdc -> seq 1, ide -> seq 2 (shared monotone counter)
+    assert row["sequence_number"] == 2
+    diffs = log.read(dedup=True).collect()
+    assert {(d["source"], d["sequence_number"]) for d in diffs} == {("cdc", 1), ("ide", 2)}
+    _DUAL_RESULTS[threshold] = (
+        sorted(tuple(v for k, v in r.asDict().items() if k != "updated_ts_millis")
+               for r in store.read().collect()),
+        sorted((d["session_id"], d["sequence_number"], d["source"], d["diff_data"]) for d in diffs),
+    )
+    if len(_DUAL_RESULTS) == 2:
+        assert _DUAL_RESULTS[500] == _DUAL_RESULTS[0]
+
+
+def test_small_dual_source_ticks_run_no_spark_job(spark, tmp_path):
+    """Small ticks of either source, or of both, take the driver path:
+    their foreachBatch runs no Spark job (foreachBatch jobs carry the
+    query's runId as their job group)."""
+    _stage_dual(tmp_path)
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    log = ParquetAppendLog(spark, str(tmp_path / "diffs"))
+    query = run_foreachbatch_pipeline(
+        spark,
+        str(tmp_path / "writes"),
+        str(tmp_path / "cps"),
+        store,
+        log,
+        checkpoint_location=str(tmp_path / "ckpt"),
+        ide_dir=str(tmp_path / "ide"),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        query.processAllAvailable()  # cdc + ide in one batch
+        _ide_tick(tmp_path, 2, "2026-01-01 00:00:06.000", b"ide line1\nide line3")
+        query.processAllAvailable()  # ide only
+        assert tracker.getJobIdsForGroup(str(query.runId)) == []
+    finally:
+        query.stop()
+    row = store.read_docs(["thread-0"])["thread-0"]
+    assert row["sequence_number"] == 3
+    assert json.loads(row["ide_content"])["ide_task"][0]["content"] == "ide line1\nide line3"
+    assert sorted(d["sequence_number"] for d in log.read(dedup=True).collect()) == [1, 2, 3]
 
 
 def test_torn_commit_rolls_forward_without_losing_rows(spark, tmp_path, monkeypatch):

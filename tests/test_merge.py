@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from cdc_agents_data_stream_spark.operators.merge import (
     merge_item,
     new_state,
@@ -122,3 +124,45 @@ def test_start_history_capped(monkeypatch):
     assert len(hist) == 16
     assert hist[0]["content"] == f"v{n - 16 + 1}"
     assert hist[-1]["content"] == f"v{n}"
+
+
+_HASH_SEED_SCRIPT = """
+import json
+from cdc_agents_data_stream_spark.operators.merge import transition
+
+tasks = [f"task-{i}" for i in range(12)] + ["a__start__", "z", "caf\\u00e9"]
+state, out = None, []
+for tick in range(3):
+    items = [
+        {"task_id": t, "content": f"{t} line {tick}\\nshared", "timestamp": tick,
+         "thread_id": "th", "checkpoint_id": f"cp-{tick}"}
+        for i, t in enumerate(tasks) if (i + tick) % 3
+    ]
+    state, diff = transition(state, "th", items)
+    out.append(json.dumps(diff))
+print(json.dumps(state["cdc_content"]))
+print("\\n".join(out))
+"""
+
+
+def test_diff_bytes_do_not_depend_on_the_hash_seed():
+    """The same transition sequence run under two string-hash seeds prints
+    byte-identical diff documents (tasks in sorted order), so a replay on
+    another process or a Spark worker writes the same ``diff_data``."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = []
+    for seed in ("1", "2"):
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        outs.append(
+            subprocess.run(
+                [sys.executable, "-c", _HASH_SEED_SCRIPT],
+                cwd=root, env=env, capture_output=True, text=True, check=True,
+            ).stdout
+        )
+    assert outs[0] == outs[1]
+    diff = json.loads(outs[0].splitlines()[1])
+    assert list(diff["diffData"]) == sorted(diff["diffData"])

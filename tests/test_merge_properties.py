@@ -16,7 +16,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cdc_agents_data_stream_spark.operators.merge import transition
-from cdc_agents_data_stream_spark.plans.backfill import doc_to_state_row
+from cdc_agents_data_stream_spark.streaming.pipeline import doc_to_state_row
 
 TASKS = ["a", "b", "with__start__"]
 

@@ -125,10 +125,10 @@ def test_stateful_pipeline_available_now(spark, tmp_path):
     row = out[0]
     assert row["session_id"] == "s1"
     assert row["sequence_number"] == 1
-    doc = json.loads(row["state_json"])
-    assert set(doc["cdc_content"]) == {"a", "b"}
-    diff = json.loads(row["batch_diff"])
-    assert set(diff["diffData"]) == {"a", "b"}
+    assert row["source"] == "cdc"
+    assert set(json.loads(row["cdc_content"])) == {"a", "b"}
+    diff = json.loads(row["diff_data"])
+    assert set(diff) == {"a", "b"}
 
     # second increment: one task changes -> seq 2, diff only for that task
     pd.DataFrame(
@@ -152,11 +152,34 @@ def test_stateful_pipeline_available_now(spark, tmp_path):
     query2.awaitTermination(240)
     out2 = sorted(spark.read.parquet(str(out_dir)).collect(), key=lambda r: r["sequence_number"])
     assert [r["sequence_number"] for r in out2] == [1, 2]
-    diff2 = json.loads(out2[1]["batch_diff"])
-    assert set(diff2["diffData"]) == {"a"}
-    ch = diff2["diffData"]["a"]["changes"][0]["change"]
+    diff2 = json.loads(out2[1]["diff_data"])
+    assert set(diff2) == {"a"}
+    ch = diff2["a"]["changes"][0]["change"]
     assert ch["type"] == "insert_content"
     assert ch["lines"] == ["line3"]
+
+    # rows tagged with a source: cdc applies before ide within the batch,
+    # one output row per absorbed source, one shared sequence number
+    pd.DataFrame(
+        [
+            {"session_id": "s1", "task_id": t, "content": c, "ts_millis": 3000,
+             "checkpoint_id": "cp3", "source": src}
+            for t, c, src in (("ide-t", "ide text", "ide"), ("b", "line1\nline2-b2", "cdc"))
+        ]
+    ).to_parquet(joined_dir / "batch2.parquet")
+    query3 = run_stateful_pipeline(
+        spark,
+        str(joined_dir),
+        checkpoint_location=str(tmp_path / "ckpt2"),
+        trigger={"availableNow": True},
+        output_path=str(out_dir),
+    )
+    query3.awaitTermination(240)
+    out3 = sorted(spark.read.parquet(str(out_dir)).collect(), key=lambda r: r["sequence_number"])
+    assert [(r["sequence_number"], r["source"]) for r in out3[2:]] == [(3, "cdc"), (4, "ide")]
+    assert set(json.loads(out3[2]["diff_data"])) == {"b"}
+    assert set(json.loads(out3[3]["ide_content"])) == {"ide-t"}
+    assert set(json.loads(out3[3]["cdc_content"])) == {"a", "b"}
 
 
 def test_stateful_ttl_evicts_idle_sessions(spark, tmp_path):
@@ -215,7 +238,8 @@ def test_stateful_ttl_evicts_idle_sessions(spark, tmp_path):
         s1_evicted = [x for x in r if x["evicted"] and x["session_id"] == "s1"]
         assert len(s1_evicted) == 1
         assert s1_evicted[0]["sequence_number"] == 1
-        assert json.loads(s1_evicted[0]["state_json"])["sequence_number"] == 1
+        assert s1_evicted[0]["diff_data"] is None
+        assert json.loads(s1_evicted[0]["cdc_content"])["a"][0]["content"] == "x"
 
         # s1 wakes after eviction: Spark state is gone, so seq restarts at 1
         pd.DataFrame(
