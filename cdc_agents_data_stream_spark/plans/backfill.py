@@ -3,185 +3,109 @@
 Reference: the startup CommandLineRunner scans the globally-latest
 checkpoint per task_path and funnels each through the same
 merge/diff/upsert path as live events, sequentially on one thread
-(config/CdcSubscriberConfig.java:117-175). Here the whole backfill is ONE
-distributed plan:
+(config/CdcSubscriberConfig.java:117-175). Here a batch is ONE
+bucket-aligned Spark job:
 
     writes ⋈ checkpoints → latest blob per (thread, task)      [2 shuffles]
-      → left join prior state on session_id                    [1 shuffle]
-      → repartition(session) + mapInArrow(``absorb`` per session)
-      → MERGE into state store + append diffs
+      ∪ the IDE stream's latest blobs, each row tagged with its source
+      → tag each row with its state-store bucket, repartition(bucket),
+        sortWithinPartitions(bucket, session)                   [1 shuffle]
+      → mapInArrow, one bucket at a time: read the bucket's current
+        file, ``absorb`` session by session (cdc before ide), write the
+        merged bucket, and append the task's diff rows as one log file
+      → driver: one manifest commit
 
-Per-key ordering (X8) is free: a session's rows all hash to one partition
-of the ``mapInArrow`` stage, so the read-modify-write is serial per key
-without any locks.
+The job is ``ParquetStateStore.merge_buckets``; this module only supplies
+the per-bucket transition. There is no state read, join or shuffle: the
+store's bucket layout is the job's partitioning, the way a Structured
+Streaming state store is partitioned like its stateful operator, so a task
+reads and writes only its own buckets and holds one bucket at a time.
+
+Per-key ordering (X8) is free: a session's rows all land in its bucket's
+partition, so the read-modify-write is serial per key without any locks.
 """
 
 from __future__ import annotations
 
+import itertools
 import time
-from typing import Any
+from functools import reduce
+from operator import itemgetter
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from ..operators.latest import ide_latest_blobs_per_task, latest_blobs_per_task
-from ..schemas import DATA_STREAM_STATE_SCHEMA
-from ..state.store import ParquetAppendLog, ParquetStateStore
-from ..streaming.pipeline import absorb, diff_log_row
+from ..state.store import _STATE_PA_SCHEMA, ParquetAppendLog, ParquetStateStore
+from ..streaming.pipeline import absorb
 
-# mapInArrow output: the full state row plus the (nullable) ``diff_data``
-# ``absorb`` printed for this batch, denormalized so one pass feeds both sinks.
-_TRANSITION_OUTPUT = (
-    "session_id string, sequence_number int, cdc_content string, "
-    "ide_content string, metadata string, ctx string, "
-    "updated_ts_millis long, diff_data string"
-)
-# rows per emitted Arrow batch: bounds the transition's output memory
-_OUT_BATCH_ROWS = 1024
+# a session absorbs its sources in this order (the reference's startup
+# order); any other source name follows them
+_SOURCE_RANK = {"cdc": 0, "ide": 1}
 
 
-def _run_transition(
-    latest: DataFrame,
-    state_df: DataFrame,
-    source: str,
-    ctx_providers=None,
-    broadcast_state: bool = False,
-    now_ms: int | None = None,
-) -> DataFrame:
-    """``broadcast_state=True`` is the streaming-batch shape: the slice of
-    state joined per micro-batch is bounded by the batch's session count
-    (and in production the store read is pre-filtered to those sessions),
-    so the outer side broadcasts and the big shuffle disappears.
+def _absorb_bucket(ctx_providers, now_ms: int):
+    """The ``merge_buckets`` function of a transition batch: the bucket's
+    prior rows for the batch's sessions go through ``absorb`` with the
+    session's rows, one source after the other; the bucket's other rows
+    are kept as they are (a store written before diffs left the state row
+    keeps their diff-history columns)."""
 
-    Grouping shape: sessions are small and numerous, so instead of
-    ``groupBy().applyInPandas`` (one Python call + DataFrame build per
-    group — measured 3.3× slower at 15 k groups), rows are hash-
-    repartitioned by session and each PARTITION processes its groups in
-    one Python call — same shuffle, whole-group-per-call guarantee
-    preserved (a key's rows all land in its partition),
-    ~N_sessions/N_partitions fewer Arrow round trips. The partition must
-    fit in worker memory — the same sizing constraint the shuffle already
-    imposes. No explicit partition count: the hash exchange starts at
-    ``spark.sql.shuffle.partitions`` (size that to the cluster) and AQE
-    coalesces it when the batch is small — coalescing merges whole hash
-    partitions, so a key's rows still land together.
+    def merge(old: pa.Table | None, rows: pa.Table):
+        prior: dict[str, dict] = {}
+        kept = None
+        if old is not None:
+            hit = pc.is_in(old["session_id"], value_set=rows["session_id"])
+            prior = {r["session_id"]: r for r in old.filter(hit).to_pylist()}
+            kept = old.filter(pc.invert(hit))
+        state_rows, diff_rows = [], []
+        # rows arrive sorted by session
+        for sid, group in itertools.groupby(rows.to_pylist(), key=itemgetter("session_id")):
+            by_source: dict[str, list[dict]] = {}
+            for r in group:
+                by_source.setdefault(r["source"], []).append(r)
+            row = prior.get(sid)
+            for src in sorted(by_source, key=lambda s: (_SOURCE_RANK.get(s, len(_SOURCE_RANK)), s)):
+                row, diff_row = absorb(sid, row, by_source[src], src, now_ms, ctx_providers)
+                if diff_row is not None:
+                    diff_rows.append(diff_row)
+            state_rows.append(row)
+        new = pa.Table.from_pylist(state_rows, schema=_STATE_PA_SCHEMA)
+        merged = new if kept is None else pa.concat_tables([kept, new], promote_options="permissive")
+        return merged, len(state_rows), diff_rows
 
-    Python boundary shape (guide §4): ``mapInArrow`` + ``to_pylist`` —
-    the transition kernel consumes and produces plain dicts, so pandas
-    Block construction on both sides of it was pure overhead. The
-    previous ``mapInPandas`` form (pd.concat + groupby + ONE single-row
-    DataFrame per session) measured ~16 s of executor CPU for 2000
-    sessions; the dict path cuts the per-session cost to the transition
-    kernel itself plus C-speed Arrow<->pylist conversion."""
-    # a store written before diffs left the state row still carries the
-    # diff-history columns; they stay out of the join and the Python workers
-    state_cols = set(DATA_STREAM_STATE_SCHEMA.fieldNames())
-    state_df = state_df.select(*[c for c in state_df.columns if c in state_cols])
-    if broadcast_state:
-        state_df = F.broadcast(state_df)
-    enriched = latest.withColumnRenamed("thread_id", "session_id").join(
-        state_df, "session_id", "left"
-    )
-    batch_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-    out_schema = to_arrow_schema(StructType.fromDDL(_TRANSITION_OUTPUT))
-
-    def per_partition(batches):
-        import pyarrow as pa
-
-        # a session's rows all live in this partition (hash repartition),
-        # so one dict-of-lists grouping pass per partition is exact
-        groups: dict[str, list[dict[str, Any]]] = {}
-        for batch in batches:
-            for row in batch.to_pylist():
-                groups.setdefault(row["session_id"], []).append(row)
-        out: list[dict[str, Any]] = []
-        for sid, rows in groups.items():
-            # every row carries the joined prior state; null seq = new session
-            prior = rows[0] if rows[0]["sequence_number"] is not None else None
-            state_row, diff_row = absorb(sid, prior, rows, source, batch_ms, ctx_providers)
-            out.append({**state_row, "diff_data": diff_row and diff_row["diff_data"]})
-            if len(out) == _OUT_BATCH_ROWS:
-                yield pa.RecordBatch.from_pylist(out, schema=out_schema)
-                out = []
-        if out:
-            yield pa.RecordBatch.from_pylist(out, schema=out_schema)
-
-    return enriched.repartition("session_id").mapInArrow(
-        per_partition, schema=_TRANSITION_OUTPUT
-    )
+    return merge
 
 
 def apply_transition_batch(
     latest: DataFrame,
     state_store: ParquetStateStore,
     diff_log: ParquetAppendLog | None,
-    source: str,
+    source: str = "cdc",
     ctx_providers=None,
     now_ms: int | None = None,
-    small_result_max_rows: int = 500,
-    prune_state: bool = False,
 ) -> int:
     """Run one batch of ``latest`` (thread_id, task_id, content, ts_millis,
-    checkpoint_id) through the grouped state transition, then MERGE state
-    and append diffs. Returns the number of updated sessions.
+    checkpoint_id, and optionally source) through the state transition as
+    one bucket-aligned job (module docstring) and commit it. Rows without
+    a ``source`` column are absorbed as ``source``. Returns the number of
+    updated sessions.
 
-    The transition always runs as the distributed plan (that is the path
-    that scales), but the SINK is adaptive, mirroring the streaming
-    pipeline's small-batch split: when the batch updates at most
-    ``small_result_max_rows`` sessions, the state rows are collected once
-    (from the already-materialized cache) and MERGEd driver-side with
-    pyarrow — the distributed write job on a 100-row result pays ~2 Spark
-    job launches plus a 64-directory committer pass of pure overhead,
-    while the driver MERGE is single-digit milliseconds against the same
-    bucket layout and commit protocol. Large results take the distributed
-    bucketed MERGE unchanged.
-
-    ``prune_state=True`` is the micro-batch shape: only the state buckets
-    the batch's sessions hash to are read, and that bounded slice is
-    broadcast into the transition join.
-
-    Diffs are appended BEFORE the state commit: a crash between the two
-    replays the batch, recomputes the identical rows (``now_ms`` is the
-    single batch stamp), and appends the same diff again —
-    ``diff_log.read(dedup=True)`` collapses the replica."""
+    Each task writes its diff rows before the driver claims the state
+    version. A crash between the two replays the batch, recomputes the
+    identical rows (``now_ms`` is the single batch stamp) and appends the
+    same diffs again — ``diff_log.read(dedup=True)`` collapses the replica.
+    A lost claim deletes the attempt's diffs and re-runs the job against
+    the winner's snapshot."""
     batch_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-    if prune_state:
-        state_df = state_store.read(
-            keys=latest.select(F.col("thread_id").alias("session_id")), key="session_id"
-        )
-    else:
-        state_df = state_store.read()
-    updated = _run_transition(
-        latest, state_df, source, ctx_providers, broadcast_state=prune_state, now_ms=batch_ms
-    ).cache()
-    try:
-        n = updated.count()  # materialize before the store swap reads/overwrites
-        if n <= small_result_max_rows:
-            # bounded: guarded by n <= small_result_max_rows (counted above)
-            rows = [r.asDict() for r in updated.collect()]
-            if diff_log is not None:
-                diff_log.append_rows(
-                    [diff_log_row(r, source, r["diff_data"]) for r in rows if r["diff_data"] is not None]
-                )
-            state_store.upsert_rows(rows)  # takes the state columns only
-        else:
-            if diff_log is not None:
-                # ``diff_log_row`` as a projection: columns move, bytes do not change
-                diff_log.append(
-                    updated.filter(F.col("diff_data").isNotNull()).select(
-                        "session_id",
-                        "sequence_number",
-                        F.lit(source).alias("source"),
-                        "diff_data",
-                        F.col("updated_ts_millis").alias("ts_millis"),
-                    )
-                )
-            state_store.upsert(updated.drop("diff_data"))
-    finally:
-        updated.unpersist()
-    return n
+    if "source" not in latest.columns:
+        latest = latest.withColumn("source", F.lit(source))
+    rows = latest.select(
+        F.col("thread_id").alias("session_id"), "task_id", "content", "ts_millis", "checkpoint_id", "source"
+    )
+    return state_store.merge_buckets(rows, _absorb_bucket(ctx_providers, batch_ms), log=diff_log)
 
 
 def backfill(
@@ -196,27 +120,22 @@ def backfill(
     small_result_max_rows: int = 500,
 ) -> DataFrame:
     """Run the backfill for the CDC stream (and the IDE stream when its
-    table is supplied — X10 dual fan-in writing disjoint columns). Returns
-    the updated state DataFrame.
+    table is supplied — X10 dual fan-in writing disjoint columns) as one
+    ``apply_transition_batch`` over both. Returns the updated state
+    DataFrame.
 
     ``now_ms`` (default: wall clock, once) stamps every state row of the
-    batch; replaying with the same value writes byte-identical rows."""
-    result = None
-    batch_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-    for source, latest in (
-        ("cdc", latest_blobs_per_task(writes, checkpoints) if writes is not None else None),
-        ("ide", ide_latest_blobs_per_task(ide_checkpoints) if ide_checkpoints is not None else None),
-    ):
-        if latest is None:
-            continue
+    batch; replaying with the same value writes byte-identical rows.
+    ``small_result_max_rows`` is still accepted and selects nothing: every
+    batch is the one bucket-aligned job."""
+    latest = []
+    if writes is not None:
+        latest.append(latest_blobs_per_task(writes, checkpoints).withColumn("source", F.lit("cdc")))
+    if ide_checkpoints is not None:
+        latest.append(ide_latest_blobs_per_task(ide_checkpoints).withColumn("source", F.lit("ide")))
+    if latest:
         apply_transition_batch(
-            latest,
-            state_store,
-            diff_log,
-            source,
-            ctx_providers,
-            now_ms=batch_ms,
-            small_result_max_rows=small_result_max_rows,
+            reduce(DataFrame.unionByName, latest), state_store, diff_log,
+            ctx_providers=ctx_providers, now_ms=now_ms,
         )
-        result = state_store.read()
-    return result if result is not None else state_store.read()
+    return state_store.read()

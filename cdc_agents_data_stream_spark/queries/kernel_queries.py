@@ -155,9 +155,9 @@ def merge_transition_seq(spark, sf_dir):
         for uid, g in pd.concat(pdfs, ignore_index=True).groupby("user_id", sort=False):
             yield fn((uid,), g)
 
-    # partition-batched grouping (see plans/backfill.py::_run_transition):
-    # one pandas groupby per partition instead of one Arrow round trip per
-    # of the ~15k tiny per-user groups
+    # partition-batched grouping: a hash repartition keeps each user's
+    # rows in one partition, so one pandas groupby per partition replaces
+    # one Arrow round trip per each of the ~15k tiny per-user groups
     par = ev.sparkSession.sparkContext.defaultParallelism
     return ev.repartition(par, "user_id").mapInPandas(
         per_partition,

@@ -71,48 +71,61 @@ def writes_checkpoints_scan(spark, sf_dir):
 
 
 def backfill_state_build(spark, sf_dir):
-    """X7 end-to-end under the gate: the SAME distributed composition the
-    backfill plan runs (plans/backfill.py::backfill; reference
+    """X7 end-to-end under the gate: the SAME composition the backfill
+    plan runs (plans/backfill.py; reference
     config/CdcSubscriberConfig.java:117-175) — scan → F1/F5 filter → J1
-    join → A1 latest-per-(thread,task) → left-join prior state (empty
-    here) → partition-batched ``mapInArrow`` state transition — then the
-    resulting state documents are cracked back open for the oracle:
-    one row per (session, task) with the absorbed content, the session's
-    sequence number (must be 1: first absorbing batch, X6) and its diff-doc
-    count (must be 1: one diff doc per absorbing batch, X5), read from the
-    batch's returned diff — diffs are not kept in the state row.
+    join → A1 latest-per-(thread,task) → the bucket-aligned
+    ``apply_transition_batch`` into an empty temp-dir store and diff log —
+    then the resulting state documents are cracked back open for the
+    oracle: one row per (session, task) with the absorbed content, the
+    session's sequence number (must be 1: first absorbing batch, X6) and
+    its diff-doc count in the log (must be 1: one diff doc per absorbing
+    batch, X5).
 
-    ``updated_ts_millis``/``diff_data`` are dropped — the wall-clock stamp
-    is the one non-deterministic state field (a replay passes the batch's
-    ``now_ms``; see ``streaming.pipeline.absorb``)."""
-    from ..plans.backfill import _run_transition
-    from ..schemas import DATA_STREAM_STATE_SCHEMA
+    ``updated_ts_millis`` is dropped — the wall-clock stamp is the one
+    non-deterministic state field (a replay passes the batch's ``now_ms``;
+    see ``streaming.pipeline.absorb``). The store lives in a
+    TemporaryDirectory, so the result is collected and re-wrapped before
+    the directory vanishes."""
+    import os
+    import tempfile
+
+    from ..plans.backfill import apply_transition_batch
+    from ..state.store import ParquetAppendLog, ParquetStateStore
 
     ev = load(spark, sf_dir, "events")
     writes, checkpoints = _synthetic_write_tables(ev)
     latest = latest_blobs_per_task(writes, checkpoints)
-    empty_state = spark.createDataFrame([], DATA_STREAM_STATE_SCHEMA)
-    updated = _run_transition(latest, empty_state, "cdc")
     content = F.from_json(
         "cdc_content", "map<string, array<struct<content:string>>>"
     )
-    return (
-        updated.select(
-            "session_id",
-            F.col("sequence_number").cast("long").alias("seq"),
-            # the prior state is empty, so this batch's diff is the whole history
-            F.when(F.col("diff_data").isNotNull(), 1).otherwise(0).cast("long").alias("n_diffs"),
-            F.explode(content).alias("task_id", "items"),
+    with tempfile.TemporaryDirectory() as d:
+        store = ParquetStateStore(spark, os.path.join(d, "state"))
+        log = ParquetAppendLog(spark, os.path.join(d, "diffs"))
+        apply_transition_batch(latest, store, log, "cdc")
+        n_diffs = log.read(dedup=True).groupBy("session_id").agg(F.count("*").alias("n_diffs"))
+        out = (
+            store.read()
+            .join(n_diffs, "session_id", "left")
+            .select(
+                "session_id",
+                F.col("sequence_number").cast("long").alias("seq"),
+                F.coalesce("n_diffs", F.lit(0)).cast("long").alias("n_diffs"),
+                F.explode(content).alias("task_id", "items"),
+            )
+            .select(
+                "session_id",
+                "seq",
+                "n_diffs",
+                "task_id",
+                # LWW keys hold exactly the newest item (operators/merge.py:44)
+                F.col("items")[0]["content"].alias("content"),
+            )
         )
-        .select(
-            "session_id",
-            "seq",
-            "n_diffs",
-            "task_id",
-            # LWW keys hold exactly the newest item (operators/merge.py:44)
-            F.col("items")[0]["content"].alias("content"),
+        rows = out.collect()
+        return spark.createDataFrame(
+            rows, "session_id string, seq long, n_diffs long, task_id string, content string"
         )
-    )
 
 
 WRITES_CHECKPOINTS_SCAN_SQL = """
@@ -695,70 +708,58 @@ QUERIES["applog_write_roundtrip"] = Q(
 
 def difflog_replay_equivalence(spark, sf_dir):
     """Event-sourcing invariant, machine-checked per session: replaying
-    the diff docs the two absorbing batches emitted (X5; each pass's
-    ``diff_data``, what the diff log receives) from an empty map must
-    reconstruct EXACTLY the final absorbed content — i.e. the diff
-    log alone is sufficient to rebuild state (the property the
-    reference's DiffServiceTest replay helper pins per kernel call,
-    here end-to-end through TWO absorbing batches of the real
-    distributed transition). Batch 1 = even events, batch 2 = odd, so
-    every session absorbs twice and every second diff is a real
-    before→after Myers diff, not a first-insert. Output per session:
-    sequence number, diff-doc count, and the replay verdict the oracle
-    pins to TRUE for every session."""
+    the diff docs the two absorbing batches appended to the diff log (X5)
+    from an empty map must reconstruct EXACTLY the final absorbed content
+    — i.e. the diff log alone is sufficient to rebuild state (the property
+    the reference's DiffServiceTest replay helper pins per kernel call,
+    here end-to-end through TWO absorbing batches of the real bucket-
+    aligned transition into a temp-dir store). Batch 1 = even events,
+    batch 2 = odd, so every session absorbs twice and every second diff is
+    a real before→after Myers diff, not a first-insert. Output per
+    session: sequence number, diff-doc count, and the replay verdict the
+    oracle pins to TRUE for every session."""
+    import json as _json
+    import os
+    import tempfile
+
     from ..functions.diffkernel import _concat_sorted, apply_ops
     from ..functions.jsoncanon import canonicalize_lines
-    from ..plans.backfill import _run_transition
-    from ..schemas import DATA_STREAM_STATE_SCHEMA
+    from ..plans.backfill import apply_transition_batch
+    from ..state.store import ParquetAppendLog, ParquetStateStore
 
     ev = load(spark, sf_dir, "events")
-    w1, c1 = _synthetic_write_tables(ev.filter(F.col("event_id") % 2 == 0))
-    w2, c2 = _synthetic_write_tables(ev.filter(F.col("event_id") % 2 == 1))
-    empty_state = spark.createDataFrame([], DATA_STREAM_STATE_SCHEMA)
-    s1 = _run_transition(latest_blobs_per_task(w1, c1), empty_state, "cdc")
-    s2 = _run_transition(
-        latest_blobs_per_task(w2, c2), s1.drop("diff_data"), "cdc", broadcast_state=True
-    ).join(s1.select("session_id", F.col("diff_data").alias("diff_1")), "session_id", "left")
-
-    import json as _json
-
-    import pandas as pd
-
-    def check(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                # pass order is sequence order
-                diffs = [_json.loads(d) for d in (r.diff_1, r.diff_data) if d is not None]
-                task_lines: dict = {}
-                for diff_data in diffs:
-                    for task, td in diff_data.items():
-                        ops = [c["change"] for c in td["changes"]]
-                        task_lines[task] = apply_ops(task_lines.get(task, []), ops)
-                final = _json.loads(r.cdc_content or "{}")
-                ok = all(
-                    task_lines.get(task, [])
-                    == canonicalize_lines(_concat_sorted(items))
-                    for task, items in final.items()
-                ) and all(
-                    lines == [] for t, lines in task_lines.items() if t not in final
-                )
-                out.append(
-                    {
-                        "session_id": r.session_id,
-                        "seq": int(r.sequence_number),
-                        "n_diffs": len(diffs),
-                        "replay_ok": bool(ok),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return (
-        s2.mapInPandas(
-            check, schema="session_id string, seq long, n_diffs long, replay_ok boolean"
+    with tempfile.TemporaryDirectory() as d:
+        store = ParquetStateStore(spark, os.path.join(d, "state"))
+        log = ParquetAppendLog(spark, os.path.join(d, "diffs"))
+        for half in (0, 1):
+            w, c = _synthetic_write_tables(ev.filter(F.col("event_id") % 2 == half))
+            apply_transition_batch(latest_blobs_per_task(w, c), store, log, "cdc")
+        # bounded: ≤ 50 sessions (user_id % 50) and two diffs each
+        state = store.read().select("session_id", "sequence_number", "cdc_content").collect()
+        diffs: dict[str, list] = {}
+        for r in sorted(
+            log.read(dedup=True).select("session_id", "sequence_number", "diff_data").collect(),
+            key=lambda r: (r["session_id"], r["sequence_number"]),  # replay in sequence order
+        ):
+            diffs.setdefault(r["session_id"], []).append(_json.loads(r["diff_data"]))
+    out = []
+    for r in state:
+        task_lines: dict = {}
+        for diff_data in diffs.get(r["session_id"], []):
+            for task, td in diff_data.items():
+                ops = [c["change"] for c in td["changes"]]
+                task_lines[task] = apply_ops(task_lines.get(task, []), ops)
+        final = _json.loads(r["cdc_content"] or "{}")
+        ok = all(
+            task_lines.get(task, []) == canonicalize_lines(_concat_sorted(items))
+            for task, items in final.items()
+        ) and all(lines == [] for t, lines in task_lines.items() if t not in final)
+        out.append(
+            (r["session_id"], int(r["sequence_number"]), len(diffs.get(r["session_id"], [])), bool(ok))
         )
-        .orderBy("session_id")
-    )
+    return spark.createDataFrame(
+        out, "session_id string, seq long, n_diffs long, replay_ok boolean"
+    ).orderBy("session_id")
 
 
 # seq = 1 (every session absorbs batch 1) + 1 IF batch 2 changes anything:

@@ -9,23 +9,30 @@ O(touched buckets), not O(total store):
 
 - rows live in ``N_BUCKETS`` hash buckets of the merge key; each bucket's
   current data is one parquet directory;
-- a JSON **manifest** maps bucket id -> data directory; ``upsert`` writes
-  ONLY the buckets the update touches (old bucket rows anti-joined against
-  the update's keys, plus the update rows) into a new uniquely-named data
-  directory in a single partitioned write job, then commits a new manifest
-  that repoints just those buckets;
+- a JSON **manifest** maps bucket id -> data directory. A MERGE writes
+  ONLY the buckets it touches into a new uniquely-named data directory,
+  then commits a new manifest that repoints just those buckets. The
+  distributed MERGE is ``merge_buckets``: ONE bucket-aligned Spark job
+  whose tasks each hold whole buckets (the rows are repartitioned by
+  bucket and sorted by key), read a bucket's current file from the
+  manifest snapshot the driver ships, merge it with a per-bucket function
+  (``_replace_by_key`` for ``upsert``; the CDC transition for
+  ``plans/backfill.py``), write the merged bucket, and append their side
+  rows (diffs) to the log — one bucket in memory at a time, no state
+  shuffle, no join;
 - **commit is optimistic multi-writer AND crash-safe**: version ``nv`` is
   claimed by atomically ``os.link``-ing a fully-written manifest into
   ``_manifest_v{nv}.json`` — a claimed manifest is complete by
   construction, so a writer killed at ANY instruction leaves either no
   claim or a valid one, never a torn file. Exactly one concurrent writer
   wins, then advances the ``_VERSION`` pointer (lock-guarded, monotonic).
-  A loser discards its (never-referenced, uniquely named) data directory,
-  ROLLS the winner's claim FORWARD if the winner died before advancing
-  the pointer (no deadlock on a SIGKILLed writer; its committed data
-  survives), re-reads the new snapshot, RE-MERGES its rows, and retries —
-  so two live streams (the reference runs the cdc and ide subscribers
-  concurrently) can MERGE into one store with no lost rows;
+  A loser discards its (never-referenced, uniquely named) data directory
+  and the log files of its attempt, ROLLS the winner's claim FORWARD if
+  the winner died before advancing the pointer (no deadlock on a
+  SIGKILLed writer; its committed data survives), re-reads the new
+  snapshot, RE-MERGES its rows, and retries — so two live streams (the
+  reference runs the cdc and ide subscribers concurrently) can MERGE into
+  one store with no lost rows;
 - recent manifests are retained so concurrent readers that already
   resolved an old pointer finish cleanly; a data directory is vacuumed
   only when it is referenced by an EXPIRED manifest and by no retained
@@ -34,11 +41,15 @@ O(touched buckets), not O(total store):
   version leaves an orphan directory (bounded by one batch); real table
   formats handle the same case with retention-based orphan GC.
 
+Every pyarrow-written store and log file goes through ``_write_parquet``
+(zstd, statistics only on key and stamp columns); the Spark-side writes
+use zstd too. Files written with other codecs keep reading.
+
 The bucket hash is md5-based so it is computable identically from a Spark
 expression AND plain Python — the streaming pipeline's small-batch fast
 path reads/writes buckets driver-side with pyarrow (zero Spark jobs),
-while large batches run the distributed MERGE; both address the same
-bucket layout.
+while large batches run the bucket job; both address the same bucket
+layout.
 
 At 100 TB this is the shape that survives: a batch touching 0.1% of
 sessions rewrites ~0.1% of buckets, never the full store. On a real
@@ -56,6 +67,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,6 +99,126 @@ _DIFFS_PA_SCHEMA = pa.schema(
         ("ts_millis", pa.int64()),
     ]
 )
+
+
+# the only columns that carry min/max statistics: keys and stamps. The
+# document columns are large JSON strings no reader prunes on (Spark's own
+# parquet writer keeps no statistics for them either), and they are
+# written without a dictionary: their values are nearly all distinct.
+_STATS_COLS = ("session_id", "sequence_number", "updated_ts_millis", "source", "ts_millis")
+_DOC_COLS = ("cdc_content", "ide_content", "diff_data")
+# zstd level of the bucket job's files. Measured on one backfill_bulk run's
+# store (64 bucket files, 3900 rows) and log (48 files, 7200 rows): level 6
+# writes 13% fewer bytes than the default level 1 (1268 vs 1458 KB) for
+# ~35 ms more CPU per 64 buckets, spread over the job's tasks. The driver
+# path keeps the default level: its writes sit on the live tick.
+_JOB_ZSTD_LEVEL = 6
+
+
+def _write_parquet(table: pa.Table, path: str, key: str = "session_id", level: int | None = None) -> None:
+    """The one pyarrow writer of store and log files: zstd (at ``level``,
+    default the library's), no embedded Arrow schema, statistics only on
+    ``_STATS_COLS`` and ``key``, no dictionary on ``_DOC_COLS``. The file
+    is written under a hidden tmp name (readers skip names starting with
+    ``.``) and renamed into place, so a retried writer replaces its file
+    instead of adding a second copy."""
+    names = table.column_names
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.{uuid.uuid4().hex[:8]}.tmp")
+    pq.write_table(
+        table,
+        tmp,
+        compression="zstd",
+        compression_level=level,
+        store_schema=False,
+        use_dictionary=[c for c in names if c not in _DOC_COLS],
+        write_statistics=[c for c in names if c in _STATS_COLS or c == key],
+    )
+    os.replace(tmp, path)
+
+
+def _replace_by_key(key: str):
+    """``merge_buckets`` function of a plain MERGE: update rows replace the
+    bucket's rows with the same key, other rows are kept. Columns the two
+    sides do not share read back null (schema evolution)."""
+
+    def merge(old: pa.Table | None, rows: pa.Table):
+        if old is None:
+            return rows, rows.num_rows, None
+        kept = old.filter(pc.invert(pc.is_in(old[key], value_set=rows[key])))
+        return pa.concat_tables([kept, rows], promote_options="permissive"), rows.num_rows, None
+
+    return merge
+
+
+_BUCKET_TASK_OUTPUT = "bucket int, path string, n_updated long, log_file string, schema string"
+_BUCKET_TASK_PA_SCHEMA = pa.schema(
+    [
+        ("bucket", pa.int32()),
+        ("path", pa.string()),
+        ("n_updated", pa.int64()),
+        ("log_file", pa.string()),
+        ("schema", pa.string()),
+    ]
+)
+
+
+def _bucket_task(snapshot: dict[int, str], ddir: str, key: str, merge_fn, log_dir: str | None):
+    """``mapInArrow`` body of ``merge_buckets``. The partition arrives
+    sorted by bucket, so buckets are merged one at a time: read the
+    bucket's file from the driver's manifest ``snapshot``, call
+    ``merge_fn``, write the merged bucket into the attempt's data dir
+    ``ddir``. The side rows ``merge_fn`` returns (diff rows) go to ONE log
+    file per task, named by the attempt and the partition. Emits one row
+    per bucket."""
+    attempt = os.path.basename(ddir)
+
+    def run(batches):
+        import numpy as np
+        from pyspark import TaskContext
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        done: list[tuple[int, str, int, str]] = []
+        side: list[dict] = []
+
+        def merge_bucket(b: int, pieces: list[pa.RecordBatch]) -> None:
+            rows = pa.Table.from_batches(pieces).drop_columns([_BUCKET_COL])
+            old = pq.read_table(snapshot[b]) if b in snapshot else None
+            merged, n, side_rows = merge_fn(old, rows)
+            bdir = os.path.join(ddir, f"{_BUCKET_COL}={b}")
+            os.makedirs(bdir, exist_ok=True)
+            _write_parquet(merged, os.path.join(bdir, "part-00000.parquet"), key, _JOB_ZSTD_LEVEL)
+            if log_dir is not None:
+                side.extend(side_rows or ())
+            done.append((b, f"{attempt}/{_BUCKET_COL}={b}", n, from_arrow_schema(merged.schema).json()))
+
+        cur, pieces = None, []
+        for batch in batches:
+            ids = batch.column(_BUCKET_COL).to_numpy()
+            cuts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist(), len(ids)]
+            for lo, hi in zip(cuts, cuts[1:]):
+                if hi > lo:
+                    if pieces and ids[lo] != cur:
+                        merge_bucket(cur, pieces)
+                        pieces = []
+                    cur = int(ids[lo])
+                    pieces.append(batch.slice(lo, hi - lo))
+        if pieces:
+            merge_bucket(cur, pieces)
+        log_file = None
+        if side:
+            pid = TaskContext.get().partitionId()
+            log_file = os.path.join(log_dir, f"part-{attempt}-{pid:05d}.parquet")
+            _write_parquet(pa.Table.from_pylist(side, schema=_DIFFS_PA_SCHEMA), log_file, level=_JOB_ZSTD_LEVEL)
+        if done:
+            yield pa.RecordBatch.from_pylist(
+                [
+                    {"bucket": b, "path": rel, "n_updated": n, "log_file": log_file, "schema": sj}
+                    for b, rel, n, sj in done
+                ],
+                schema=_BUCKET_TASK_PA_SCHEMA,
+            )
+
+    return run
 
 
 def bucket_of(key: str, n_buckets: int) -> int:
@@ -171,7 +303,7 @@ class ParquetStateStore:
         ).json()
 
     def _carry_dir_schemas(
-        self, prev: dict[str, str], buckets: dict[str, str], vname: str, schema_json: str
+        self, prev: dict[str, str], buckets: dict[str, str], vname: str, schema_json: str | None
     ) -> dict[str, str]:
         """dir_schemas for a new manifest: the new data dir's schema plus
         the recorded schema of every dir the new bucket map still
@@ -179,7 +311,8 @@ class ParquetStateStore:
         the manifest O(live dirs))."""
         live = {rel.split("/", 1)[0] for rel in buckets.values() if rel}
         out = {d: s for d, s in prev.items() if d in live}
-        out[vname] = schema_json
+        if schema_json is not None:  # None: unknown, readers merge footers
+            out[vname] = schema_json
         return out
 
     def _read_parquet(self, v: int, paths: list[str]) -> DataFrame:
@@ -197,23 +330,22 @@ class ParquetStateStore:
             {os.path.relpath(p, self.path).split(os.sep, 1)[0] for p in paths}
         )
         jsons = [dir_schemas.get(d) for d in dirnames]
-        if all(jsons):
-            fields: dict[str, T.StructField] = {}
-            conflict = False
-            for j in dict.fromkeys(jsons):  # distinct, first-seen order
-                for f in T.StructType.fromJson(json.loads(j)).fields:
-                    prev = fields.get(f.name)
-                    if prev is None:
-                        fields[f.name] = f
-                    elif prev.dataType != f.dataType:
-                        conflict = True
-                        break
-                if conflict:
-                    break
-            if not conflict:
-                pinned = T.StructType(list(fields.values()))
-                return self.spark.read.schema(pinned).parquet(*paths)
+        pinned = self._union_schema(jsons) if all(jsons) else None
+        if pinned is not None:
+            return self.spark.read.schema(pinned).parquet(*paths)
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+
+    @staticmethod
+    def _union_schema(jsons) -> T.StructType | None:
+        """Union of recorded StructType JSONs by column name, in first-seen
+        order; None when one name carries two types."""
+        fields: dict[str, T.StructField] = {}
+        for j in dict.fromkeys(jsons):  # distinct, first-seen order
+            for f in T.StructType.fromJson(json.loads(j)).fields:
+                prev = fields.setdefault(f.name, f)
+                if prev.dataType != f.dataType:
+                    return None
+        return T.StructType(list(fields.values()))
 
     def _try_commit(
         self, v: int, buckets: dict[str, str], dir_schemas: dict[str, str]
@@ -455,60 +587,69 @@ class ParquetStateStore:
         ).filter(F.col("_change_type").isNotNull())
 
     def upsert(self, updates: DataFrame, key: str = "session_id") -> None:
-        """MERGE: rows in ``updates`` replace same-key rows, others kept.
-        Only the touched buckets are read and rewritten (one partitioned
-        write job); the update keyset is broadcast into the anti-join —
-        the same shape Delta's MERGE uses for a small source.
+        """MERGE: rows in ``updates`` replace same-key rows, others kept —
+        ``merge_buckets`` with ``_replace_by_key``. Updates may add columns
+        (old rows read back null there) or omit columns (replaced rows
+        carry null: last-write-wins replaces the whole row)."""
+        self.merge_buckets(updates, _replace_by_key(key), key)
 
-        Losing the version claim to a concurrent writer re-merges against
-        the winner's snapshot and retries — no lost rows (the retry re-runs
-        only the touched-bucket read + write, the update side is the same
-        DataFrame)."""
-        updates_b = updates.withColumn(_BUCKET_COL, self._bucket_expr(key))
-        # bounded: distinct bucket ids ≤ n_buckets (64)
-        touched = {r[0] for r in updates_b.select(_BUCKET_COL).distinct().collect()}
-        if not touched:
-            return
+    def merge_buckets(
+        self, updates: DataFrame, merge_fn, key: str = "session_id", log: ParquetAppendLog | None = None
+    ) -> int:
+        """One bucket-aligned Spark job per MERGE. ``updates`` is tagged
+        with its bucket, repartitioned by it and sorted by (bucket, key), so
+        every task holds whole buckets and merges them one at a time (see
+        ``_bucket_task``): read the bucket's file from this snapshot, call
+        ``merge_fn(old: pa.Table | None, rows: pa.Table) -> (merged
+        table, n_updated, side rows | None)``, write the merged bucket into
+        a new uniquely named data dir. Side rows (diff rows) are appended
+        to ``log`` by the same task, before the claim. The driver then
+        commits one manifest repointing the touched buckets; returns the
+        summed ``n_updated``.
+
+        A lost claim deletes the attempt's data dir and log files and
+        re-runs the job against the winner's snapshot, so no row merged
+        against a stale snapshot is ever committed. A task retried by Spark
+        rewrites the same file names (tmp + rename), never a second copy."""
+        keyed = (
+            updates.withColumn(_BUCKET_COL, self._bucket_expr(key))
+            .repartition(_BUCKET_COL)
+            .sortWithinPartitions(_BUCKET_COL, key)
+        )
+        log_dir = None
+        if log is not None:
+            log_dir = log._data_dir()
+            os.makedirs(log_dir, exist_ok=True)
         v = self.current_version()
         while True:
-            old_paths = self._bucket_paths(v, touched) if v else []
-            if old_paths:
-                old = self._read_parquet(v, old_paths).withColumn(
-                    _BUCKET_COL, self._bucket_expr(key)
-                )
-                # allowMissingColumns = schema evolution on MERGE: updates
-                # may add columns (old rows read back null there) or omit
-                # columns (replaced rows carry null -- LWW replaces the
-                # whole row, not a partial patch)
-                merged = old.join(
-                    F.broadcast(updates.select(key)), key, "left_anti"
-                ).unionByName(updates_b, allowMissingColumns=True)
-            else:
-                merged = updates_b
             nv = v + 1
             ddir = self._new_data_dir(nv)
-            # cluster rows by bucket before the dynamic-partition write: one
-            # file per bucket instead of (tasks × buckets) fragments — the same
-            # pre-write repartition Delta's MERGE does; AQE coalesces the tiny
-            # shuffle at test scale
-            merged.repartition(F.col(_BUCKET_COL)).write.mode("overwrite").partitionBy(
-                _BUCKET_COL
-            ).parquet(ddir)
             buckets = dict(self._manifest(v))
-            vname = os.path.basename(ddir)
-            for b in touched:
-                buckets[str(b)] = f"{vname}/{_BUCKET_COL}={b}"
-            # the partition column becomes a directory, not a file column
-            written = T.StructType(
-                [f for f in merged.schema.fields if f.name != _BUCKET_COL]
-            )
+            snapshot = {int(b): os.path.join(self.path, rel) for b, rel in buckets.items() if rel}
+            task = _bucket_task(snapshot, ddir, key, merge_fn, log_dir)
+            # bounded: one row per touched bucket, ≤ n_buckets (64)
+            done = keyed.mapInArrow(task, _BUCKET_TASK_OUTPUT).collect()
+            if not done:
+                return 0
+            for r in done:
+                buckets[str(r.bucket)] = r.path
+            schema = self._union_schema(sorted({r.schema for r in done}))
             dir_schemas = self._carry_dir_schemas(
-                self._dir_schemas(v), buckets, vname, self._schema_json(written)
+                self._dir_schemas(v),
+                buckets,
+                os.path.basename(ddir),
+                schema and self._schema_json(schema),
             )
             if self._try_commit(nv, buckets, dir_schemas):
                 self._vacuum(nv)
-                return
-            shutil.rmtree(ddir, ignore_errors=True)  # lost the claim: discard, re-merge
+                return sum(r.n_updated for r in done)
+            # lost the claim: every row was merged against a stale snapshot
+            shutil.rmtree(ddir, ignore_errors=True)
+            for f in {r.log_file for r in done if r.log_file}:
+                try:
+                    os.unlink(f)
+                except FileNotFoundError:
+                    pass
             v = self._wait_for_version(nv)
 
     def delete(self, keys: DataFrame, key: str = "session_id") -> None:
@@ -534,8 +675,8 @@ class ParquetStateStore:
             remaining = old.join(F.broadcast(key_df), key, "left_anti")
             nv = v + 1
             ddir = self._new_data_dir(nv)
-            remaining.repartition(F.col(_BUCKET_COL)).write.mode(
-                "overwrite"
+            remaining.repartition(F.col(_BUCKET_COL)).write.mode("overwrite").option(
+                "compression", "zstd"
             ).partitionBy(_BUCKET_COL).parquet(ddir)
             buckets = dict(self._manifest(v))
             vname = os.path.basename(ddir)
@@ -610,7 +751,7 @@ class ParquetStateStore:
                 table = pa.Table.from_pylist(
                     [{c: row[c] for c in cols} for row in merged], schema=_STATE_PA_SCHEMA
                 )
-                pq.write_table(table, os.path.join(bdir, "part-00000.parquet"))
+                _write_parquet(table, os.path.join(bdir, "part-00000.parquet"))
                 man[str(b)] = f"{vname}/{_BUCKET_COL}={b}"
             # the fast path always writes _STATE_PA_SCHEMA, whose Spark
             # twin is DATA_STREAM_STATE_SCHEMA (module docstring)
@@ -683,7 +824,7 @@ class ParquetAppendLog:
         os.replace(tmp, self._pointer_file())
 
     def append(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self._data_dir())
+        df.write.mode("append").option("compression", "zstd").parquet(self._data_dir())
 
     def append_rows(self, rows: list[dict]) -> None:
         """Driver-side append, zero Spark jobs (small-batch fast path)."""
@@ -695,7 +836,7 @@ class ParquetAppendLog:
         table = pa.Table.from_pylist(
             [{c: r.get(c) for c in cols} for r in rows], schema=_DIFFS_PA_SCHEMA
         )
-        pq.write_table(table, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+        _write_parquet(table, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
 
     def read(self, schema=None, dedup: bool = False) -> DataFrame:
         d = self._data_dir()
@@ -725,7 +866,7 @@ class ParquetAppendLog:
         old = self._data_dir()
         df = self.read().sortWithinPartitions("session_id", "sequence_number")
         nxt = os.path.join(self.path, f"d{int(os.path.basename(old)[1:]) + 1:08d}")
-        df.coalesce(target_files).write.mode("overwrite").parquet(nxt)
+        df.coalesce(target_files).write.mode("overwrite").option("compression", "zstd").parquet(nxt)
         self._repoint(os.path.basename(nxt))
         shutil.rmtree(old, ignore_errors=True)
         return True

@@ -14,8 +14,8 @@ calls it:
 - ``run_foreachbatch_pipeline``: readStream (the writes table, plus the IDE
   checkpoint table when ``ide_dir`` is given) → foreachBatch{ small batch:
   driver-side ``absorb`` per session; large batch: the backfill's
-  ``apply_transition_batch``, whose ``mapInArrow`` transition calls
-  ``absorb`` per session } → append diff log → MERGE state store. State
+  ``apply_transition_batch``, one bucket-aligned ``mapInArrow`` job that
+  calls ``absorb`` per session } → append diff log → MERGE state store. State
   lives in the engine's own lake tables (the reference's
   ``cdc_agents_data_stream`` sink, S7); exactly-once via the streaming
   checkpoint + idempotent MERGE. This is the production-shaped path.
@@ -44,6 +44,7 @@ store reads back as extra columns and the transition ignores.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -247,12 +248,13 @@ def run_foreachbatch_pipeline(
       fixed ~0.2 s on the test host regardless of data size, so a 5-row
       tick through the distributed plan pays ~7 job launches of pure
       overhead. This is how the 2-batches/s reference cadence is matched.
-    - **large batch** (backlog absorption, backfill-scale): per source, the
-      distributed plan — broadcast the write slice against the cached
-      pointer table (the IDE slice is self-timed), bucket-pruned state
-      read, ``mapInArrow`` transition, bucketed MERGE. This is the path
-      that scales to 1000 executors; the threshold only decides who pays
-      the per-job overhead.
+    - **large batch** (backlog absorption, backfill-scale): every source's
+      rows in ONE bucket-aligned job (``apply_transition_batch``) — the
+      write slice is broadcast against the cached pointer table (the IDE
+      slice is self-timed), then each task reads, absorbs and rewrites
+      the state buckets its sessions hash to and appends their diffs.
+      This is the path that scales to 1000 executors; the threshold only
+      decides who pays the per-job overhead.
 
     The checkpoint pointer lookup is cached across batches in both paths
     (driver dict keyed by checkpoint_id / cached DataFrame)."""
@@ -358,35 +360,37 @@ def run_foreachbatch_pipeline(
     def _process_large(batch_df: DataFrame, present: list[bool], now_ms: int) -> None:
         from ..plans.backfill import apply_transition_batch
 
+        parts = []
         for i, src in enumerate(sources):
             if not present[i]:
                 continue
             part = _stream_df(batch_df).filter(F.col("stream") == i).drop("stream")
             if i == 0:
                 if not cps_df_cache:
-                    cp = (
+                    # materialized by the first transition job that reads it
+                    cps_df_cache.append(
                         with_event_time(spark.read.parquet(checkpoints_path))
                         .select("checkpoint_id", "ts_millis")
                         .cache()
                     )
-                    cp.count()
-                    cps_df_cache.append(cp)
                 # broadcast the batch slice against the (unbounded, cached)
                 # pointer table; no argmax here — the transition reduces to
                 # latest-per-task itself with the same tie-break
                 part = F.broadcast(part.drop("ts_millis")).join(cps_df_cache[0], "checkpoint_id", "inner")
-            # bucket-pruned state read + broadcast slice + adaptive sink (a
-            # large INPUT batch can still collapse to few updated sessions)
-            apply_transition_batch(
-                part.withColumn("content", F.decode(F.col("blob"), "UTF-8")).drop("blob"),
-                state_store,
-                diff_log,
-                src,
-                ctx_providers,
-                now_ms=now_ms,
-                small_result_max_rows=small_batch_max_rows,
-                prune_state=True,
+            parts.append(
+                part.withColumn("content", F.decode(F.col("blob"), "UTF-8"))
+                .drop("blob")
+                .withColumn("source", F.lit(src))
             )
+        # every source in one bucket-aligned job: a session absorbs its
+        # sources in order inside its bucket's task
+        apply_transition_batch(
+            functools.reduce(DataFrame.unionByName, parts),
+            state_store,
+            diff_log,
+            ctx_providers=ctx_providers,
+            now_ms=now_ms,
+        )
 
     def _log_offsets(batch_id: int) -> list[int] | None:
         """Each file source's log offset at the end of ``batch_id``, from

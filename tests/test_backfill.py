@@ -94,33 +94,36 @@ def test_backfill_replay_is_byte_identical(spark, paths):
 
 
 def test_backfill_large_result_uses_distributed_merge(spark, paths):
-    """Forcing the threshold to 0 exercises the distributed MERGE sink on
-    the same inputs and produces the same state and the same diff-log
-    BYTES as the driver fast path — with several tasks per diff and
-    non-ASCII / U+2028 text, which Spark-side JSON reprinting would write
-    raw where Python escapes it."""
+    """The bucket-aligned job writes the same state rows and the same
+    diff-log BYTES as the driver path (``absorb`` per session over the
+    collected latest rows, as a small streaming tick runs it) — with
+    several tasks per diff and non-ASCII / U+2028 text, which Spark-side
+    JSON reprinting would write raw where Python escapes it."""
+    from cdc_agents_data_stream_spark.operators.latest import latest_blobs_per_task
+    from cdc_agents_data_stream_spark.streaming.pipeline import absorb
+
     cps_df, writes_df = _write_tables(
         spark, paths, n_threads=2, n_ticks=3, repeat_tick=None,
         tasks=("0_task", "caf\u00e9 \u2028 task", "2_t\u00e2che__start__"),
     )
-    out = {}
-    for name, threshold in (("small", 500), ("large", 0)):
-        store = ParquetStateStore(spark, str(paths / f"state-{name}"))
-        log = ParquetAppendLog(spark, str(paths / f"diffs-{name}"))
-        backfill(
-            spark, writes_df, cps_df, store, log,
-            now_ms=1_700_000_000_000, small_result_max_rows=threshold,
-        )
-        out[name] = {
-            "state": sorted(tuple(r) for r in store.read().collect()),
-            "diffs": sorted(
-                (r["session_id"], r["sequence_number"], r["source"], r["diff_data"], r["ts_millis"])
-                for r in log.read().collect()
-            ),
-        }
-    assert out["small"]["state"] == out["large"]["state"]
-    assert out["small"]["diffs"] == out["large"]["diffs"]
-    diff_data = out["small"]["diffs"][0][3]
+    now = 1_700_000_000_000
+    store = ParquetStateStore(spark, str(paths / "state"))
+    log = ParquetAppendLog(spark, str(paths / "diffs"))
+    backfill(spark, writes_df, cps_df, store, log, now_ms=now)
+
+    by_session: dict[str, list[dict]] = {}
+    for r in latest_blobs_per_task(writes_df, cps_df).collect():
+        by_session.setdefault(r["thread_id"], []).append(r.asDict())
+    driver = [absorb(sid, None, rows, "cdc", now) for sid, rows in by_session.items()]
+    assert sorted(tuple(r) for r in store.read().collect()) == sorted(
+        tuple(state.values()) for state, _ in driver
+    )
+    diffs = sorted(
+        tuple(r)
+        for r in log.read().select("session_id", "sequence_number", "source", "diff_data", "ts_millis").collect()
+    )
+    assert diffs == sorted(tuple(diff.values()) for _, diff in driver if diff is not None)
+    diff_data = diffs[0][3]
     assert len(json.loads(diff_data)) == 3
     assert "caf\\u00e9 \\u2028" in diff_data and diff_data.isascii()
 
@@ -189,20 +192,24 @@ def test_diff_content_shape(spark, paths):
     assert ch["linesToAdd"]["start"] == 0
 
 
-@pytest.mark.parametrize("threshold", [500, 0], ids=["driver-merge", "distributed-merge"])
-def test_store_with_diff_history_columns_reads_and_upserts(spark, paths, monkeypatch, threshold):
+@pytest.mark.parametrize("path", ["driver", "job"], ids=["driver-merge", "distributed-merge"])
+def test_store_with_diff_history_columns_reads_and_upserts(spark, paths, monkeypatch, path):
     """A store written while the state row still carried the
     ``cdc_checkpoint_diffs`` / ``ide_checkpoint_diffs`` columns (by both
-    write paths: the distributed MERGE and the driver-side pyarrow MERGE,
-    whose schema constants are swapped back for the legacy write) keeps
-    reading and absorbing batches: the transition ignores the old columns,
-    rows it writes carry none, and untouched rows keep theirs."""
+    write paths: the bucket job and the driver-side pyarrow MERGE, whose
+    schema constants are swapped back for the legacy write) keeps reading
+    and absorbing batches, through the bucket-aligned job
+    (``apply_transition_batch``) and through the driver path (``absorb``
+    then ``upsert_rows``): the transition ignores the old columns, rows it
+    writes carry none, and the job keeps them on rows it does not
+    replace."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
     from cdc_agents_data_stream_spark.plans.backfill import apply_transition_batch
     from cdc_agents_data_stream_spark.schemas import DATA_STREAM_STATE_SCHEMA
     from cdc_agents_data_stream_spark.state import store as store_mod
+    from cdc_agents_data_stream_spark.streaming.pipeline import absorb
 
     legacy_cols = ["cdc_checkpoint_diffs", "ide_checkpoint_diffs"]
     fields = DATA_STREAM_STATE_SCHEMA.fields
@@ -239,12 +246,20 @@ def test_store_with_diff_history_columns_reads_and_upserts(spark, paths, monkeyp
     assert set(store.read_docs(["s0", "s5"])) == {"s0", "s5"}
 
     touched = ["s0", "s5"]
-    latest = spark.createDataFrame(
-        [(sid, "t", "new", 20, "c2") for sid in touched],
-        "thread_id string, task_id string, content string, ts_millis long, checkpoint_id string",
-    )
+    latest = [(sid, "t", "new", 20, "c2") for sid in touched]
     log = ParquetAppendLog(spark, str(paths / "diffs"))
-    n = apply_transition_batch(latest, store, log, "cdc", now_ms=2_000, small_result_max_rows=threshold)
+    if path == "job":
+        latest_df = spark.createDataFrame(
+            latest, "thread_id string, task_id string, content string, ts_millis long, checkpoint_id string"
+        )
+        n = apply_transition_batch(latest_df, store, log, "cdc", now_ms=2_000)
+    else:
+        prior = store.read_docs(touched)
+        cols = ("task_id", "content", "ts_millis", "checkpoint_id")
+        out = [absorb(sid, prior[sid], [dict(zip(cols, rest))], "cdc", 2_000) for sid, *rest in latest]
+        log.append_rows([diff for _, diff in out])
+        store.upsert_rows([state for state, _ in out])
+        n = len(out)
     assert n == len(touched)
 
     after = {r["session_id"]: r.asDict() for r in store.read().collect()}
@@ -258,8 +273,8 @@ def test_store_with_diff_history_columns_reads_and_upserts(spark, paths, monkeyp
             assert (row["sequence_number"], content) == (1, "old")
     diffs = log.read(dedup=True).select("session_id", "sequence_number").collect()
     assert sorted(tuple(r) for r in diffs) == [(sid, 2) for sid in touched]
-    # the distributed MERGE keeps the old columns on rows it does not replace
-    if threshold == 0:
+    # the bucket job keeps the old columns on rows it does not replace
+    if path == "job":
         untouched = [sid for sid in after if sid not in touched]
         assert all(after[s]["cdc_checkpoint_diffs"] == before[s]["cdc_checkpoint_diffs"] for s in untouched)
     # a second batch reads back what the first wrote, through either path

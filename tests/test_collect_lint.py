@@ -39,18 +39,14 @@ ALLOWED = {
         "_bucket_count: DESCRIBE EXTENDED rows for one table — catalog "
         "metadata (tens of rows), independent of graph size",
     ),
-    "plans/backfill.py": (
-        1,
-        "small-batch driver fast path: guarded by the small_batch_max_rows "
-        "threshold decided from a capped probe",
-    ),
     "sources/incremental.py": (
         1,
         "single-row MAX(offset) poll bookmark",
     ),
     "state/store.py": (
         3,
-        "distinct bucket ids of the touched keyset: ≤ n_buckets (64) rows",
+        "distinct bucket ids of the touched keyset, and the bucket job's "
+        "one row per touched bucket: ≤ n_buckets (64) rows",
     ),
     "streaming/ivm.py": (
         1,

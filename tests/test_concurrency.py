@@ -347,3 +347,76 @@ def test_reader_snapshot_isolation_under_concurrent_commits(spark, tmp_path):
     assert seen == sorted(seen), f"snapshots went backwards: {seen}"
     final = store.read().collect()
     assert {r["sequence_number"] for r in final} == {rounds}
+
+
+def test_distributed_dual_source_tick_runs_one_job(spark, tmp_path):
+    """A forced-distributed tick (``small_batch_max_rows=0``) holding cdc
+    and ide rows of one session absorbs both sources in ONE bucket-aligned
+    job: at most 6 Spark jobs in the query's job group, the query's own
+    start included (26 when each source ran its own state read,
+    transition, count and MERGE). Both paths still agree on the result."""
+    _stage_dual(tmp_path)
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    log = ParquetAppendLog(spark, str(tmp_path / "diffs"))
+    query = run_foreachbatch_pipeline(
+        spark,
+        str(tmp_path / "writes"),
+        str(tmp_path / "cps"),
+        store,
+        log,
+        checkpoint_location=str(tmp_path / "ckpt"),
+        small_batch_max_rows=0,
+        ide_dir=str(tmp_path / "ide"),
+    )
+    try:
+        query.processAllAvailable()
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+    finally:
+        query.stop()
+    assert 0 < len(jobs) <= 6, jobs  # measured: 3 at query start + 3 for the tick
+    row = store.read_docs(["thread-0"])["thread-0"]
+    assert row["sequence_number"] == 2
+    assert {(d["source"], d["sequence_number"]) for d in log.read(dedup=True).collect()} == {
+        ("cdc", 1),
+        ("ide", 2),
+    }
+
+
+def test_transition_job_lost_claim_reruns_against_winner(spark, tmp_path, monkeypatch):
+    """A driver-side MERGE of the same session commits between the
+    bucket job and its claim. The job loses the claim, deletes its
+    attempt's data dir and diff file, and re-runs against the winner's
+    snapshot: the winner's update survives, the session's seq advances
+    past it, and no diff row of the discarded attempt remains."""
+    from cdc_agents_data_stream_spark.plans.backfill import apply_transition_batch
+
+    store = ParquetStateStore(spark, str(tmp_path / "state"), n_buckets=8)
+    log = ParquetAppendLog(spark, str(tmp_path / "diffs"))
+    store.upsert_rows([_state_row("s", 1)])
+    ide_item = {"content": "winner", "timestamp": 1, "thread_id": "s", "checkpoint_id": "w", "task_id": "ide_task"}
+    winner = {**_state_row("s", 5), "ide_content": json.dumps({"ide_task": [ide_item]})}
+
+    real_commit = ParquetStateStore._try_commit
+    claims = []
+
+    def racing_commit(self, v, buckets, dir_schemas):
+        claims.append(v)
+        if len(claims) == 1:
+            store.upsert_rows([winner])  # lands between the job and its claim
+        return real_commit(self, v, buckets, dir_schemas)
+
+    monkeypatch.setattr(ParquetStateStore, "_try_commit", racing_commit)
+    latest = spark.createDataFrame(
+        [("s", "cdc_task", "cdc text", 10, "c1")],
+        "thread_id string, task_id string, content string, ts_millis long, checkpoint_id string",
+    )
+    assert apply_transition_batch(latest, store, log, "cdc", now_ms=2_000) == 1
+
+    assert claims == [2, 2, 3]  # job lost v2 to the driver MERGE, re-ran, won v3
+    row = store.read_docs(["s"])["s"]
+    assert row["sequence_number"] == 6
+    assert json.loads(row["ide_content"]) == {"ide_task": [ide_item]}
+    assert json.loads(row["cdc_content"])["cdc_task"][0]["content"] == "cdc text"
+    diffs = [(d["session_id"], d["sequence_number"], d["source"]) for d in log.read().collect()]
+    assert diffs == [("s", 6, "cdc")]
+    assert log.file_count() == 1

@@ -460,3 +460,36 @@ def test_pagerank_bucketed_job_growth_is_linear(pr_bucketed_graph):
     j6 = n_jobs(6)
     per_round = (j6 - j2) / 4
     assert per_round <= 4, (j2, j6)  # measured: ~2 jobs/round
+
+
+def test_backfill_batch_is_one_bucket_aligned_job(spark, tmp_path):
+    """A cdc ``backfill`` batch is the latest-blob reduction plus ONE
+    bucket-aligned transition-and-MERGE job: at most 4 Spark jobs (AQE
+    query stages), on an empty store and on a store that already holds the
+    sessions. Before the bucket job a batch ran 16: the whole-store read
+    shuffled into a join, cache + count, the distributed upsert's bucket
+    collect, anti-join and write, a separate log append and a listing job
+    for the returned read."""
+    from cdc_agents_data_stream_spark.plans.backfill import backfill
+    from cdc_agents_data_stream_spark.state.store import ParquetAppendLog, ParquetStateStore
+    from tests.checkpointgen import gen_checkpoint_tables
+
+    sc = spark.sparkContext
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    log = ParquetAppendLog(spark, str(tmp_path / "diffs"))
+    counts = []
+    for batch in range(2):
+        cps, writes = gen_checkpoint_tables(n_threads=40, n_ticks=2 + batch, repeat_tick=None)
+        cps.to_parquet(tmp_path / f"cps-{batch}.parquet")
+        writes.to_parquet(tmp_path / f"writes-{batch}.parquet")
+        w = spark.read.parquet(str(tmp_path / f"writes-{batch}.parquet"))
+        c = spark.read.parquet(str(tmp_path / f"cps-{batch}.parquet"))
+        group = f"backfill_batch_jobs_{batch}"
+        sc.setJobGroup(group, "backfill job count")
+        try:
+            state = backfill(spark, w, c, store, log)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert max(counts) <= 4, counts  # measured: 4 per batch
+    assert {r["sequence_number"] for r in state.collect()} == {2}

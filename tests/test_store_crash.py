@@ -155,3 +155,87 @@ def test_roll_forward_of_claimed_unpointed_version(tmp_path):
     assert s.current_version() == 3  # rolled v2 forward, committed v3
     rows = _all_rows(s)
     assert rows == {"a": 1, "b": 2}
+
+
+# Kills the driver once the bucket job's tasks have written their buckets
+# and diff files, before the manifest claim.
+JOB_KILL_SCRIPT = r"""
+import os, signal, sys
+sys.path.insert(0, {repo!r})
+from cdc_agents_data_stream_spark.session import get_spark
+from cdc_agents_data_stream_spark.plans.backfill import backfill
+from cdc_agents_data_stream_spark.state.store import ParquetAppendLog, ParquetStateStore
+base, now_ms = sys.argv[1], int(sys.argv[2])
+def killed(self, *a, **k):
+    print("KILLED", flush=True)
+    os.kill(os.getpid(), signal.SIGKILL)
+ParquetStateStore._try_commit = killed
+spark = get_spark("crash", master="local[1]")
+backfill(
+    spark,
+    spark.read.parquet(os.path.join(base, "writes-1.parquet")),
+    spark.read.parquet(os.path.join(base, "cps-1.parquet")),
+    ParquetStateStore(spark, os.path.join(base, "state")),
+    ParquetAppendLog(spark, os.path.join(base, "diffs")),
+    now_ms=now_ms,
+)
+"""
+
+
+def test_sigkill_between_bucket_job_and_claim_replays_identically(spark, tmp_path):
+    """A driver SIGKILLed after the bucket job's tasks wrote their buckets
+    and diff files, but before it claimed the version, leaves the store
+    unchanged (same version, manifest and rows). Replaying the batch then
+    gives state and dedup'd diffs identical to a run that never crashed:
+    the orphan data dir is never referenced and the replica diffs collapse
+    on (session, seq, source)."""
+    from cdc_agents_data_stream_spark.plans.backfill import backfill
+    from cdc_agents_data_stream_spark.state.store import ParquetAppendLog
+    from tests.checkpointgen import gen_checkpoint_tables
+
+    for batch in range(2):
+        cps, writes = gen_checkpoint_tables(n_threads=6, n_ticks=2 + batch, repeat_tick=None)
+        cps.to_parquet(tmp_path / f"cps-{batch}.parquet")
+        writes.to_parquet(tmp_path / f"writes-{batch}.parquet")
+
+    def run(name, batch, now_ms):
+        backfill(
+            spark,
+            spark.read.parquet(str(tmp_path / f"writes-{batch}.parquet")),
+            spark.read.parquet(str(tmp_path / f"cps-{batch}.parquet")),
+            ParquetStateStore(spark, str(tmp_path / name)),
+            ParquetAppendLog(spark, str(tmp_path / name.replace("state", "diffs"))),
+            now_ms=now_ms,
+        )
+
+    def snapshot(name):
+        store = ParquetStateStore(spark, str(tmp_path / name))
+        log = ParquetAppendLog(spark, str(tmp_path / name.replace("state", "diffs")))
+        return (
+            sorted(tuple(r) for r in store.read().collect()),
+            sorted(tuple(r) for r in log.read(dedup=True).select(
+                "session_id", "sequence_number", "source", "diff_data", "ts_millis").collect()),
+        )
+
+    run("state", 0, 1_000)
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    version, manifest, rows = store.current_version(), store._manifest(1), snapshot("state")[0]
+
+    proc = subprocess.run(
+        [sys.executable, "-c", JOB_KILL_SCRIPT.format(repo=REPO), str(tmp_path), "2000"],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == -signal.SIGKILL and "KILLED" in proc.stdout, proc.stderr[-2000:]
+    assert (store.current_version(), store._manifest(1)) == (version, manifest)
+    assert snapshot("state")[0] == rows
+    # the tasks did write: an orphan data dir for v2 and diff files in the log
+    assert any(n.startswith("v00000002_") for n in os.listdir(tmp_path / "state"))
+    assert any(n.startswith("part-v00000002_") for n in os.listdir(tmp_path / "diffs" / "d00000001"))
+
+    run("state", 1, 2_000)  # replay
+    run("ref-state", 0, 1_000)
+    run("ref-state", 1, 2_000)
+    assert snapshot("state") == snapshot("ref-state")
