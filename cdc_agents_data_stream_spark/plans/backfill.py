@@ -13,7 +13,7 @@ bucket-aligned Spark job:
       → mapInArrow, one bucket at a time: read the bucket's current
         file, ``absorb`` session by session (cdc before ide), write the
         merged bucket, and append the task's diff rows as one log file
-      → driver: one manifest commit
+      → driver: one manifest commit, then the diff log's merge round
 
 The job is ``ParquetStateStore.merge_buckets``; this module only supplies
 the per-bucket transition. There is no state read, join or shuffle: the

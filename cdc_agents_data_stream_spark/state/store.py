@@ -41,6 +41,16 @@ O(touched buckets), not O(total store):
   version leaves an orphan directory (bounded by one batch); real table
   formats handle the same case with retention-based orphan GC.
 
+The diff log (``ParquetAppendLog``) is the other half of a commit. Any
+number of writers append to it, each holding its shared lock from the
+diff write until its state claim is decided; after the commit, the
+committing writer runs ``merge_tiers``, which merges the log's small
+files in fixed fan-in size tiers into files sorted by (session, seq,
+source) and publishes them as a new generation directory. A merge takes
+only files whose batch is decided, keeps every row (a replayed batch's
+replica diffs collapse at read time under ``read(dedup=True)``), and
+leaves the previous generations readable for ``KEEP_GENERATIONS`` rounds.
+
 Every pyarrow-written store and log file goes through ``_write_parquet``
 (zstd, statistics only on key and stamp columns); the Spark-side writes
 use zstd too. Files written with other codecs keep reading.
@@ -59,6 +69,7 @@ becomes one ``MERGE INTO`` — call sites do not change.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -107,11 +118,15 @@ _DIFFS_PA_SCHEMA = pa.schema(
 # written without a dictionary: their values are nearly all distinct.
 _STATS_COLS = ("session_id", "sequence_number", "updated_ts_millis", "source", "ts_millis")
 _DOC_COLS = ("cdc_content", "ide_content", "diff_data")
+# the diff log's natural key: the replay-dedup key and the merged files' order
+_LOG_KEY = ("session_id", "sequence_number", "source")
 # zstd level of the bucket job's files. Measured on one backfill_bulk run's
 # store (64 bucket files, 3900 rows) and log (48 files, 7200 rows): level 6
 # writes 13% fewer bytes than the default level 1 (1268 vs 1458 KB) for
-# ~35 ms more CPU per 64 buckets, spread over the job's tasks. The driver
-# path keeps the default level: its writes sit on the live tick.
+# ~35 ms more CPU per 64 buckets, spread over the job's tasks. The diff
+# log's merged files use it too (a live run's state was 0.112 MB with them
+# at level 1, 0.107 at 6, 0.104 at 12). The driver path's per-tick writes
+# keep the default level: they sit on the live tick.
 _JOB_ZSTD_LEVEL = 6
 
 
@@ -604,8 +619,8 @@ class ParquetStateStore:
         table, n_updated, side rows | None)``, write the merged bucket into
         a new uniquely named data dir. Side rows (diff rows) are appended
         to ``log`` by the same task, before the claim. The driver then
-        commits one manifest repointing the touched buckets; returns the
-        summed ``n_updated``.
+        commits one manifest repointing the touched buckets and runs the
+        log's ``merge_tiers``; returns the summed ``n_updated``.
 
         A lost claim deletes the attempt's data dir and log files and
         re-runs the job against the winner's snapshot, so no row merged
@@ -616,10 +631,15 @@ class ParquetStateStore:
             .repartition(_BUCKET_COL)
             .sortWithinPartitions(_BUCKET_COL, key)
         )
-        log_dir = None
+        # the log's writer lock is held until the claim is won or the lost
+        # attempt's log files are deleted: no merge round takes them before
+        with log.writing() if log is not None else contextlib.nullcontext() as log_dir:
+            n = self._commit_bucket_job(keyed, merge_fn, key, log_dir)
         if log is not None:
-            log_dir = log._data_dir()
-            os.makedirs(log_dir, exist_ok=True)
+            log.merge_tiers()
+        return n
+
+    def _commit_bucket_job(self, keyed: DataFrame, merge_fn, key: str, log_dir: str | None) -> int:
         v = self.current_version()
         while True:
             nv = v + 1
@@ -786,21 +806,52 @@ class ParquetStateStore:
 
 
 class ParquetAppendLog:
-    """Append-only sink for diff documents (checkpoint_diffs table).
+    """Append-only sink for diff documents (checkpoint_diffs table), kept
+    in size tiers so its file count grows logarithmically, not one file
+    per batch.
 
-    Concurrency: ``append``/``append_rows`` are multi-writer safe — every
-    writer produces uniquely-named part files (Spark task UUIDs / uuid4),
-    so two live streams can append to one log. ``compact`` alone is
-    SINGLE-WRITER (it swaps the data-dir pointer; an append racing the
-    swap could land in the just-retired dir) — run it from one maintenance
-    thread, with appends quiesced. Readers are safe at any time —
-    compaction swaps a pointer, never a live path.
+    Layout: ``_LOGDIR`` names the current generation directory
+    ``d{gen:08d}``; its visible ``*.parquet`` files are the log. An append
+    (``append``, ``append_rows``, the bucket job's tasks) adds a tier-0
+    file; a merged file is named ``t{tier}-*.parquet``. After each batch's
+    state commit the committing writer calls ``merge_tiers``: once
+    ``FAN_IN`` files of one tier accumulate, they become one file of the
+    next tier (cascading when that tier fills too), so after N appended
+    files each tier holds fewer than ``FAN_IN`` files and there are about
+    log_FAN_IN(N) tiers. Merged files are sorted by (session_id,
+    sequence_number, source), which is where the bytes go: a live
+    session's successive diffs repeat its growing message lists and
+    compress against each other only inside one file.
 
-    Replay safety: the streaming pipeline appends diffs BEFORE committing
-    state, so a crash between the two replays the batch and appends the
-    same diff again. ``read(dedup=True)`` collapses those replays on the
-    natural key (session_id, sequence_number, source).
+    Multi-writer appends: every writer holds the SHARED lock ``_log.lock``
+    (``writing``) from resolving the data dir through its first diff write
+    until its state claim is won, or until its lost attempt's files are
+    deleted. A merge round takes the EXCLUSIVE lock without waiting and
+    skips the round when any writer holds it, so a merge only ever takes
+    files whose batch is decided, and no append can land in a generation
+    after the merge listed it. The lock is a single-host ``flock``, like
+    the store's ``_ptr.lock``.
+
+    Reader retention: a merge never touches a live path. It publishes a
+    NEW generation — the merged file plus hard links to the files it left
+    alone — and then repoints ``_LOGDIR``. A reader that resolved an
+    older generation (a ``read()`` DataFrame built before the round) keeps
+    reading it; generations older than the last ``KEEP_GENERATIONS`` are
+    deleted by the round that publishes a new one, the way the store keeps
+    ``KEEP_VERSIONS`` manifests. A round killed before its repoint leaves
+    a never-published generation, which the next round deletes.
+
+    Replay dedup: the pipelines append diffs BEFORE committing state, so a
+    crash between the two replays the batch and appends the same diff
+    again. A merge keeps every row (replicas included); ``read(dedup=True)``
+    collapses replays on the natural key (session_id, sequence_number,
+    source).
     """
+
+    # files of one tier merged into one file of the next; a constant, so
+    # every writer of one log agrees on the layout
+    FAN_IN = 16
+    KEEP_GENERATIONS = 3
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -823,20 +874,36 @@ class ParquetAppendLog:
             fh.write(name)
         os.replace(tmp, self._pointer_file())
 
+    def _lock_file(self):
+        return open(os.path.join(self.path, "_log.lock"), "a")
+
+    @contextlib.contextmanager
+    def writing(self):
+        """Hold the shared writer lock; yields the data dir, resolved under
+        it. Writers keep it from their first diff write until their batch
+        is decided (class docstring). Holders never wait on each other."""
+        import fcntl
+
+        with self._lock_file() as lk:
+            fcntl.flock(lk, fcntl.LOCK_SH)
+            d = self._data_dir()
+            os.makedirs(d, exist_ok=True)
+            yield d
+
     def append(self, df: DataFrame) -> None:
-        df.write.mode("append").option("compression", "zstd").parquet(self._data_dir())
+        with self.writing() as d:
+            df.write.mode("append").option("compression", "zstd").parquet(d)
 
     def append_rows(self, rows: list[dict]) -> None:
         """Driver-side append, zero Spark jobs (small-batch fast path)."""
         if not rows:
             return
-        d = self._data_dir()
-        os.makedirs(d, exist_ok=True)
         cols = [f.name for f in _DIFFS_PA_SCHEMA]
         table = pa.Table.from_pylist(
             [{c: r.get(c) for c in cols} for r in rows], schema=_DIFFS_PA_SCHEMA
         )
-        _write_parquet(table, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+        with self.writing() as d:
+            _write_parquet(table, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
 
     def read(self, schema=None, dedup: bool = False) -> DataFrame:
         d = self._data_dir()
@@ -844,29 +911,120 @@ class ParquetAppendLog:
             return self.spark.createDataFrame([], schema or CHECKPOINT_DIFFS_SCHEMA)
         df = self.spark.read.parquet(d)
         if dedup:
-            df = df.dropDuplicates(["session_id", "sequence_number", "source"])
+            df = df.dropDuplicates(list(_LOG_KEY))
         return df
 
+    @staticmethod
+    def _files(d: str) -> list[str]:
+        """The log files of generation dir ``d``, sorted by name (hidden
+        tmp files, ``_SUCCESS`` and checksums are not log files)."""
+        try:
+            names = os.listdir(d)
+        except FileNotFoundError:
+            return []
+        return sorted(n for n in names if n.endswith(".parquet") and not n.startswith((".", "_")))
+
     def file_count(self) -> int:
-        d = self._data_dir()
-        if not os.path.isdir(d):
-            return 0
-        return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+        return len(self._files(self._data_dir()))
+
+    def _tier_plan(self, names: list[str]):
+        """The files one ``merge_tiers`` round merges and the tier of the
+        merged file, or None: the lowest tier holding ``FAN_IN`` files,
+        cascading up while the merged file would fill the next tier."""
+        by_tier: dict[int, list[str]] = {}
+        for n in names:
+            by_tier.setdefault(_tier(n), []).append(n)
+        take: list[str] = []
+        out = None
+        for t in range(max(by_tier, default=-1) + 1):
+            files = by_tier.get(t, [])
+            if len(files) + (out is not None) >= self.FAN_IN:
+                take += files
+                out = t + 1
+            elif out is not None:
+                break
+        return None if out is None else (take, out, 1)
+
+    def merge_tiers(self) -> bool:
+        """The per-commit compaction step, called by the writer that just
+        committed a batch once it has released ``writing``. Costs one
+        pointer read and one listdir when no tier is full; otherwise runs
+        one merge round, skipped when a writer holds the lock. Returns True
+        when a round published a generation."""
+        if self._tier_plan(self._files(self._data_dir())) is None:
+            return False
+        return self._merge_round(self._tier_plan)
 
     def compact(self, target_files: int = 4, min_files: int = 32) -> bool:
-        """Small-file compaction: each micro-batch appends a few tiny
-        parquet files; once ``min_files`` accumulate, rewrite the log into
-        ``target_files`` files (sorted by (session, seq) so range scans
-        prune) under a NEW data dir, then atomically repoint — readers that
-        resolved the old pointer finish on the old dir, which is removed
-        only after the swap. Single-writer (see class docstring): no append
-        may run concurrently. Returns True when a compaction happened."""
-        if self.file_count() < min_files:
-            return False
-        old = self._data_dir()
-        df = self.read().sortWithinPartitions("session_id", "sequence_number")
-        nxt = os.path.join(self.path, f"d{int(os.path.basename(old)[1:]) + 1:08d}")
-        df.coalesce(target_files).write.mode("overwrite").option("compression", "zstd").parquet(nxt)
-        self._repoint(os.path.basename(nxt))
-        shutil.rmtree(old, ignore_errors=True)
+        """Full compaction: once ``min_files`` files accumulate, merge ALL
+        of them into ``target_files`` files holding contiguous ranges of
+        the (session_id, sequence_number, source) order, published as a new
+        generation (class docstring), so readers of the previous one are
+        unaffected. Skipped when a writer holds the lock. Returns True when
+        a compaction happened."""
+
+        def plan(names):
+            if len(names) < min_files:
+                return None
+            return names, max(map(_tier, names)) + 1, target_files
+
+        return self._merge_round(plan)
+
+    def _merge_round(self, plan) -> bool:
+        """Under the exclusive lock (not waited for): ``plan(files)`` picks
+        ``(inputs, tier, n_out)`` from the current generation's files; the
+        inputs' rows are sorted and written as ``n_out`` files of ``tier``
+        into the next generation dir next to hard links of the other
+        files, then ``_LOGDIR`` is repointed and expired or unpublished
+        generations are deleted."""
+        import fcntl
+
+        with self._lock_file() as lk:
+            try:
+                fcntl.flock(lk, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                return False  # a writer's batch is undecided: next commit retries
+            old = self._data_dir()
+            names = self._files(old)
+            picked = plan(names)
+            if picked is None:
+                return False
+            inputs, tier, n_out = picked
+            gen = _generation(os.path.basename(old)) + 1
+            new = os.path.join(self.path, f"d{gen:08d}")
+            shutil.rmtree(new, ignore_errors=True)  # a round killed before its repoint
+            os.makedirs(new)
+            # schema metadata dropped: a Spark-written input's row-schema JSON
+            # would not describe a union of inputs
+            table = pa.concat_tables(
+                [pq.read_table(os.path.join(old, n)) for n in inputs], promote_options="permissive"
+            ).replace_schema_metadata(None)
+            table = table.sort_by([(c, "ascending") for c in _LOG_KEY if c in table.column_names])
+            step = -(-table.num_rows // n_out) or 1
+            for lo in range(0, table.num_rows or 1, step):
+                _write_parquet(
+                    table.slice(lo, step),
+                    os.path.join(new, f"t{tier}-{uuid.uuid4().hex[:12]}.parquet"),
+                    level=_JOB_ZSTD_LEVEL,
+                )
+            for n in set(names) - set(inputs):
+                os.link(os.path.join(old, n), os.path.join(new, n))
+            self._repoint(os.path.basename(new))
+            for name in os.listdir(self.path):
+                g = _generation(name)
+                if g is not None and not gen - self.KEEP_GENERATIONS < g <= gen:
+                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
         return True
+
+
+def _tier(name: str) -> int:
+    """Tier of a log file: ``t{k}-*`` is a merged file of tier k; any other
+    name is an append (tier 0)."""
+    head = name.split("-", 1)[0]
+    return int(head[1:]) if head[:1] == "t" and head[1:].isdigit() else 0
+
+
+def _generation(name: str) -> int | None:
+    """Generation number of a log data dir ``d{gen:08d}``; None for any
+    other name."""
+    return int(name[1:]) if name[:1] == "d" and name[1:].isdigit() else None

@@ -234,7 +234,10 @@ def run_foreachbatch_pipeline(
     the batch against the uncommitted state, recomputes the identical diff,
     and appends it again — ``diff_log.read(dedup=True)`` collapses the
     replica. (Diff-after-state would instead LOSE the diff: on replay the
-    transition sees the update already absorbed and emits None.)
+    transition sees the update already absorbed and emits None.) The
+    batch holds the log's writer lock from its diff append until its
+    state commit, then runs the log's merge round (``merge_tiers``), so
+    the log's file count grows logarithmically in the batch count.
 
     Two execution paths per micro-batch, chosen by measured batch size —
     the same ``absorb``, state bucket layout, and commit protocol serve
@@ -354,8 +357,12 @@ def run_foreachbatch_pipeline(
                     if diff_row is not None:
                         diff_rows.append(diff_row)
             state_rows.append(row)
-        diff_log.append_rows(diff_rows)
-        state_store.upsert_rows(state_rows)
+        # the writer lock keeps the log's merge rounds off this batch's
+        # diffs until its state commit decides it
+        with diff_log.writing():
+            diff_log.append_rows(diff_rows)
+            state_store.upsert_rows(state_rows)
+        diff_log.merge_tiers()
 
     def _process_large(batch_df: DataFrame, present: list[bool], now_ms: int) -> None:
         from ..plans.backfill import apply_transition_batch

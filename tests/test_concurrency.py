@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import functools
 import json
+import os
 import threading
 import time
 
@@ -420,3 +421,97 @@ def test_transition_job_lost_claim_reruns_against_winner(spark, tmp_path, monkey
     diffs = [(d["session_id"], d["sequence_number"], d["source"]) for d in log.read().collect()]
     assert diffs == [("s", 6, "cdc")]
     assert log.file_count() == 1
+
+
+def test_lost_claim_diffs_never_reach_a_merged_file(spark, tmp_path, monkeypatch):
+    """The bucket job's attempt loses its claim while a log merge round is
+    due: the winning driver-path batch commits in between and runs its
+    round, which must skip (the attempt's writer lock is held) rather than
+    merge the attempt's diff file. The attempt's diffs never reach a merged
+    file; after the re-run wins, its own commit runs the round."""
+    import pyarrow.parquet as pq
+
+    from cdc_agents_data_stream_spark.plans.backfill import apply_transition_batch
+
+    store = ParquetStateStore(spark, str(tmp_path / "state"), n_buckets=8)
+    log = ParquetAppendLog(spark, str(tmp_path / "diffs"))
+    store.upsert_rows([_state_row("s", 1)])
+    # one file short of a round: the attempt's diff file makes it due
+    for i in range(ParquetAppendLog.FAN_IN - 1):
+        log.append_rows([{"session_id": f"o{i}", "sequence_number": 1, "source": "cdc", "diff_data": "[]", "ts_millis": i}])
+    winner = _state_row("s", 5)
+
+    real_commit = ParquetStateStore._try_commit
+    claims, rounds = [], []
+
+    def racing_commit(self, v, buckets, dir_schemas):
+        claims.append(v)
+        if len(claims) == 1:
+            # a driver-path batch lands between the job and its claim
+            with log.writing():
+                log.append_rows([{"session_id": "w", "sequence_number": 1, "source": "cdc", "diff_data": "[]", "ts_millis": 0}])
+                store.upsert_rows([winner])
+            rounds.append(log.merge_tiers())
+        return real_commit(self, v, buckets, dir_schemas)
+
+    monkeypatch.setattr(ParquetStateStore, "_try_commit", racing_commit)
+    latest = spark.createDataFrame(
+        [("s", "cdc_task", "cdc text", 10, "c1")],
+        "thread_id string, task_id string, content string, ts_millis long, checkpoint_id string",
+    )
+    assert apply_transition_batch(latest, store, log, "cdc", now_ms=2_000) == 1
+
+    assert claims == [2, 2, 3] and rounds == [False]
+    assert store.read_docs(["s"])["s"]["sequence_number"] == 6
+    # the re-run's commit ran the round: one merged file, in which session
+    # s has only the re-run's diff (the lost attempt's was seq 2)
+    d = log._data_dir()
+    assert [n.split("-")[0] for n in log._files(d)] == ["t1"]
+    merged = [
+        r
+        for gen in os.listdir(log.path) if gen.startswith("d")
+        for f in log._files(os.path.join(log.path, gen)) if f.startswith("t")
+        for r in pq.read_table(os.path.join(log.path, gen, f)).to_pylist()
+    ]
+    assert [(r["session_id"], r["sequence_number"]) for r in merged if r["session_id"] == "s"] == [("s", 6)]
+    assert len(merged) == ParquetAppendLog.FAN_IN + 1
+
+
+def test_concurrent_appends_and_merge_rounds_lose_no_row(tmp_path):
+    """More writer threads than cores append to one log and run its merge
+    round after each append, with a short switch interval: every row ends
+    up in the current generation exactly once (an append landing in a
+    generation after a round listed it would be lost)."""
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    log = ParquetAppendLog(None, str(tmp_path / "diffs"))  # no Spark on this path
+    n_threads, per_thread, errors = 8, 40, []
+
+    def writer(t: int):
+        try:
+            for i in range(per_thread):
+                with log.writing():
+                    log.append_rows([{"session_id": f"t{t}", "sequence_number": i, "source": "cdc", "diff_data": "[]", "ts_millis": i}])
+                log.merge_tiers()
+        except Exception as exc:  # surface into the main thread
+            errors.append(exc)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not errors and not any(t.is_alive() for t in threads)
+    d = log._data_dir()
+    rows = pa.concat_tables([pq.read_table(os.path.join(d, f)) for f in log._files(d)]).to_pylist()
+    keys = sorted((r["session_id"], r["sequence_number"]) for r in rows)
+    assert keys == sorted((f"t{t}", i) for t in range(n_threads) for i in range(per_thread))
+    assert any(f.startswith("t") for f in log._files(d))  # rounds did run

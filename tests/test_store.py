@@ -9,6 +9,7 @@ import json
 import os
 import time
 
+import pyarrow.parquet as pq
 import pytest
 
 from cdc_agents_data_stream_spark.state.store import (
@@ -111,6 +112,44 @@ def test_append_log_rows_and_dedup(spark, tmp_path):
     log.append_rows([d])  # replayed batch
     assert log.read().count() == 2
     assert log.read(dedup=True).count() == 1
+
+
+def _diff(i: int) -> dict:
+    return {
+        "session_id": f"s{i % 5}",
+        "sequence_number": i // 5,
+        "source": "cdc" if i % 2 else "ide",
+        "diff_data": f'[{{"line": {i}}}]',
+        "ts_millis": 1000 + i,
+    }
+
+
+def test_append_log_reader_survives_compaction(spark, tmp_path):
+    """A ``read()`` DataFrame built before a compaction still collects
+    every row after it: the compaction publishes a new generation and the
+    old one is kept for ``KEEP_GENERATIONS`` rounds, then deleted."""
+    log = ParquetAppendLog(spark, str(tmp_path / "log"))
+    for i in range(40):
+        log.append_rows([_diff(i)])
+    early = log.read()
+    expected = sorted(tuple(_diff(i).values()) for i in range(40))
+    assert log.compact(target_files=2, min_files=32)
+    assert sorted(tuple(r) for r in early.collect()) == expected
+    assert sorted(tuple(r) for r in log.read().collect()) == expected
+    # each compacted file holds one sorted run of (session, seq, source)
+    d = log._data_dir()
+    files = log._files(d)
+    assert len(files) == 2
+    for f in files:
+        keys = [(r["session_id"], r["sequence_number"], r["source"]) for r in pq.read_table(os.path.join(d, f)).to_pylist()]
+        assert keys == sorted(keys)
+    # later rounds expire the early reader's generation, and only it
+    for i in range(40, 40 + log.KEEP_GENERATIONS * log.FAN_IN):
+        log.append_rows([_diff(i)])
+        log.merge_tiers()
+    gens = sorted(n for n in os.listdir(log.path) if n.startswith("d"))
+    assert len(gens) == log.KEEP_GENERATIONS and os.path.basename(d) not in gens
+    assert log.read(dedup=True).count() == 40 + log.KEEP_GENERATIONS * log.FAN_IN
 
 
 @pytest.mark.parametrize("force_distributed", [False, True])

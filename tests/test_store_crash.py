@@ -239,3 +239,65 @@ def test_sigkill_between_bucket_job_and_claim_replays_identically(spark, tmp_pat
     run("ref-state", 0, 1_000)
     run("ref-state", 1, 2_000)
     assert snapshot("state") == snapshot("ref-state")
+
+
+# Kills a diff-log merge round after it wrote the merged file and linked the
+# files it left alone into the next generation, before the repoint.
+MERGE_KILL_SCRIPT = r"""
+import os, signal, sys
+sys.path.insert(0, {repo!r})
+from cdc_agents_data_stream_spark.state.store import ParquetAppendLog
+def killed(self, name):
+    print("KILLED", sorted(os.listdir(os.path.join(self.path, name))), flush=True)
+    os.kill(os.getpid(), signal.SIGKILL)
+ParquetAppendLog._repoint = killed
+ParquetAppendLog(None, sys.argv[1]).merge_tiers()
+"""
+
+
+def _diff_row(i: int) -> dict:
+    return {
+        "session_id": f"s{i % 3}",
+        "sequence_number": i,
+        "source": "cdc",
+        "diff_data": f'[{{"line": {i}}}]',
+        "ts_millis": 1000 + i,
+    }
+
+
+def test_sigkill_between_merged_file_and_repoint(spark, tmp_path):
+    """A merge round SIGKILLed after writing its merged file but before
+    repointing ``_LOGDIR`` leaves the log's reads unchanged: the new
+    generation was never published. The next round deletes it and
+    publishes its own, with every row exactly once."""
+    from cdc_agents_data_stream_spark.state.store import ParquetAppendLog
+
+    path = tmp_path / "diffs"
+    log = ParquetAppendLog(spark, str(path))
+    for i in range(ParquetAppendLog.FAN_IN):
+        log.append_rows([_diff_row(i)])
+
+    def rows(dedup):
+        return sorted(tuple(r) for r in log.read(dedup=dedup).collect())
+
+    before = rows(True)
+    proc = subprocess.run(
+        [sys.executable, "-c", MERGE_KILL_SCRIPT.format(repo=REPO), str(path)],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == -signal.SIGKILL and "KILLED" in proc.stdout, proc.stderr
+    assert "t1-" in proc.stdout  # the merged file was written
+    assert log._data_dir() == str(path / "d00000001")
+    assert os.path.isdir(path / "d00000002")  # the unpublished generation
+    assert rows(True) == before
+
+    log.append_rows([_diff_row(ParquetAppendLog.FAN_IN)])
+    assert log.merge_tiers()
+    assert log._data_dir() == str(path / "d00000002")
+    # one merged file holding each row once: nothing of the killed round's
+    # generation survived into the published one
+    assert [n.split("-")[0] for n in log._files(log._data_dir())] == ["t1"]
+    assert rows(False) == rows(True) == sorted(before + [tuple(_diff_row(ParquetAppendLog.FAN_IN).values())])
+    assert not [n for n in os.listdir(path / "d00000002") if n.endswith(".tmp")]

@@ -92,6 +92,53 @@ def test_foreachbatch_cadence(spark, tmp_path):
         query.stop()
 
 
+def test_driver_path_batches_keep_the_diff_log_tiered(spark, tmp_path, monkeypatch):
+    """40 driver-path micro-batches, one diff file each: the commit after
+    each batch runs the log's merge round, so the log ends with fewer than
+    ``FAN_IN`` files per tier (2 merged + 8 appended files, not 40), and
+    its dedup'd rows hash equal to the rows the batches appended."""
+    import hashlib
+
+    (tmp_path / "writes").mkdir()
+    (tmp_path / "cps").mkdir()
+    n_ticks = 40
+    for tick in range(n_ticks):
+        _drop_tick(tmp_path, tick, n_threads=2)
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    log = ParquetAppendLog(spark, str(tmp_path / "diffs"))
+    appended, counts = [], []
+    real_append, real_merge = log.append_rows, log.merge_tiers
+
+    def recording_append(rows):
+        appended.extend(tuple(r.values()) for r in rows)
+        real_append(rows)
+
+    def counting_merge():
+        out = real_merge()
+        counts.append(log.file_count())
+        return out
+
+    monkeypatch.setattr(log, "append_rows", recording_append)
+    monkeypatch.setattr(log, "merge_tiers", counting_merge)
+    query = run_foreachbatch_pipeline(
+        spark, str(tmp_path / "writes"), str(tmp_path / "cps"), store, log,
+        checkpoint_location=str(tmp_path / "ckpt"),
+        trigger={"availableNow": True}, max_files_per_trigger=1,
+    )
+    query.awaitTermination()
+    assert query.exception() is None
+
+    def sha(rows):
+        return hashlib.sha256(repr(sorted(set(rows))).encode()).hexdigest()
+
+    assert len(counts) == n_ticks and len(appended) == 2 * n_ticks
+    # after every commit: under FAN_IN - 1 files per tier, two tiers here
+    assert max(counts) <= 2 * (ParquetAppendLog.FAN_IN - 1)
+    files = log._files(log._data_dir())
+    assert sorted(n.split("-")[0] for n in files) == ["part"] * 8 + ["t1"] * 2
+    assert sha(tuple(r) for r in log.read(dedup=True).collect()) == sha(appended)
+
+
 def test_stateful_pipeline_available_now(spark, tmp_path):
     """applyInPandasWithState path over pre-joined rows, availableNow."""
     joined_dir = tmp_path / "joined"
