@@ -19,8 +19,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 
-def get_spark(app_name: str = "cdc-agents-data-stream-spark", master: str | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's tuned defaults."""
+def get_spark(
+    app_name: str = "cdc-agents-data-stream-spark", master: str | None = None, ui: bool = False
+) -> SparkSession:
+    """Build (or reuse) a SparkSession with the engine's tuned defaults.
+    ``ui=True`` starts the Spark UI and its REST API (the profiling tools
+    read stage metrics from it); it only takes effect when this call
+    starts the SparkContext."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -48,7 +53,7 @@ def get_spark(app_name: str = "cdc-agents-data-stream-spark", master: str | None
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+        .config("spark.ui.enabled", str(ui).lower())
         # list up to 256 paths on the driver instead of in a Spark job: a
         # state-store read passes one path per bucket (64), above the
         # default threshold of 32, and the listing job cost 1 job and

@@ -43,6 +43,27 @@ def test_simhash_values_is_one_wide_aggregation(docs):
     assert "partial_sum" in plan
 
 
+def test_simhash_values_match_a_python_simhash(docs):
+    """The one-expression aggregation against a plain-Python SimHash: md5
+    of each space-split token (occurrences weighted), bit j set when more
+    tokens have it set than not."""
+    import hashlib
+
+    want = {}
+    for r in docs.select("doc_id", "text").collect():
+        if r["text"] is None:
+            continue
+        balance = [0] * 32
+        for tok in r["text"].split(" "):
+            h0 = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+            for j in range(32):
+                balance[j] += 1 if (h0 >> j) & 1 else -1
+        want[r["doc_id"]] = sum(1 << j for j in range(32) if balance[j] > 0)
+    got = {r["doc_id"]: r["simhash"] for r in simhash_values(docs).collect()}
+    assert len(got) > 100
+    assert got == want
+
+
 def test_embedding_neardup_plan_has_no_cross_join(emb):
     plan = _physical_plan(embedding_neardup_pairs(emb, threshold=0.45))
     assert "CartesianProduct" not in plan

@@ -1,10 +1,17 @@
 #!/usr/bin/env python3
-"""Stage-level profile of one registry query: run it once on a UI-enabled
+"""Stage-level profile of one registry query: run it on a UI-enabled
 session, then dump per-stage executor-time, task-skew (median vs max task),
 and shuffle volumes from the UI REST API. This is the tool that localized
 the round-5 fuzzy_entity_match cost (uniform verify volume, NOT a
 straggler — median task 56.8 s vs max 58.6 s in the dominant stage),
 turning a guessed "salt the skew" plan into a measured volume fix.
+
+Every call (warm-ups included) also prints its driver-side split: the
+DataFrame build (the query function itself), planning (``executedPlan``),
+the run (``collect``) and the number of Spark jobs the call ran. That
+split showed the small-input floor of the analytics mix: a 32-column
+SimHash aggregation built from ``Column`` objects and a footer-inference
+job per table read.
 
 Usage: python tools/stage_profile.py QUERY [SF_DIR] [top_n]
 """
@@ -12,38 +19,19 @@ Usage: python tools/stage_profile.py QUERY [SF_DIR] [top_n]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(query: str, sf_dir: str = "/root/testdata/sf0.1", top_n: str = "18") -> None:
-    import os
+    from cdc_agents_data_stream_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    # mirror session.get_spark's tuned defaults, with the UI enabled
-    # (get_spark disables it; the REST API is the whole point here)
-    spark = (
-        SparkSession.builder.appName(f"profile-{query}")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-        .getOrCreate()
-    )
+    # the engine's session, with the UI on: the REST API is the whole point
+    spark = get_spark(f"profile-{query}", ui=True)
     spark.sparkContext.setLogLevel("ERROR")
     from cdc_agents_data_stream_spark.queries.registry import all_queries
 
@@ -56,9 +44,7 @@ def main(query: str, sf_dir: str = "/root/testdata/sf0.1", top_n: str = "18") ->
     # every stage; profile the LAST run only, after the JIT settles
     warm_runs = int(os.environ.get("SPARK_GRAFT_PROFILE_WARMUPS", "3"))
     for i in range(warm_runs):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        print(f"# warm{i}: {time.perf_counter() - t0:.2f}s", file=sys.stderr)
+        profiled_call(spark, fn, sf_dir, f"warm{i}")
         spark.catalog.clearCache()
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist()
@@ -68,10 +54,7 @@ def main(query: str, sf_dir: str = "/root/testdata/sf0.1", top_n: str = "18") ->
             urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages")
         )
     }
-    t0 = time.perf_counter()
-    n = fn(spark, sf_dir).count()
-    dt = time.perf_counter() - t0
-    print(f"# {query} @ {sf_dir}: {dt:.2f}s, {n} rows", file=sys.stderr)
+    profiled_call(spark, fn, sf_dir, f"{query}@{os.path.basename(sf_dir)}")
 
     stages = [
         s
@@ -114,6 +97,30 @@ def main(query: str, sf_dir: str = "/root/testdata/sf0.1", top_n: str = "18") ->
             f"{r[5]:8d} {r[6]:8d}  {skew:5.2f}"
         )
     spark.stop()
+
+
+def profiled_call(spark, fn, sf_dir: str, label: str) -> None:
+    """Run ``fn(spark, sf_dir)`` to its collected rows in a job group of
+    its own and print the driver-side split."""
+    sc = spark.sparkContext
+    group = f"stage-profile-{label}"
+    sc.setJobGroup(group, group)
+    try:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df._jdf.queryExecution().executedPlan()
+        t2 = time.perf_counter()
+        n = len(df.collect())
+        t3 = time.perf_counter()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    print(
+        f"# {label}: build {(t1 - t0) * 1e3:.1f} ms, plan {(t2 - t1) * 1e3:.1f} ms, "
+        f"run {(t3 - t2) * 1e3:.1f} ms, {jobs} jobs, {n} rows",
+        file=sys.stderr,
+    )
 
 
 if __name__ == "__main__":
