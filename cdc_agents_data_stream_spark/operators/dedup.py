@@ -198,10 +198,15 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
 
 def _pair_jaccard(
-    sh: DataFrame, candidates: DataFrame | None = None, sizes_carried: bool = False
+    sh: DataFrame,
+    candidates: DataFrame | None = None,
+    sizes_carried: bool = False,
+    sh_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard over a shingle index; optionally restricted to
-    candidate (doc_a, doc_b) pairs.
+    candidate (doc_a, doc_b) pairs. With ``sizes_carried``, ``sh_b`` is
+    the index ``doc_b`` is looked up in (default: ``sh``) — the
+    incremental probe keeps the new and the history side apart.
 
     ``sizes_carried=True`` says ``candidates`` carries ``sz_a``/``sz_b`` (the
     size-carry form: per-doc set sizes computed as a free extra aggregate in
@@ -212,7 +217,9 @@ def _pair_jaccard(
     ``candidates`` has."""
     if candidates is not None and sizes_carried:
         a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        b_sh = sh.select(F.col("doc_id").alias("b_doc"), F.col("shingle").alias("b_shingle"))
+        b_sh = (sh if sh_b is None else sh_b).select(
+            F.col("doc_id").alias("b_doc"), F.col("shingle").alias("b_shingle")
+        )
         return (
             candidates.join(a_sh, "doc_a")
             .join(b_sh, (F.col("doc_b") == F.col("b_doc")) & (F.col("shingle") == F.col("b_shingle")))
@@ -590,14 +597,13 @@ def minhash_lsh_incremental(
     # match-rate-proportional (every dirty record links at entity
     # resolution), so the pin must spill too
     candidates = _pin_spill(candidates)
-    cand_docs = candidates.select(
-        F.explode(F.array("doc_a", "doc_b")).alias(id_col)
-    ).distinct()
-    sh_cand = (
-        sh_new.unionByName(sh_hist).join(cand_docs, id_col, "left_semi")
-    )
+    # one semi-join per side: a doc_id present in both batches keeps two
+    # gram sets, so the union of both sides would double its rows and
+    # push the intersection count past the set sizes (Jaccard > 1)
+    sh_a = sh_new.join(candidates.select(F.col("doc_a").alias(id_col)), id_col, "left_semi")
+    sh_b = sh_hist.join(candidates.select(F.col("doc_b").alias(id_col)), id_col, "left_semi")
     return (
-        _pair_jaccard(sh_cand, candidates, sizes_carried=with_size)
+        _pair_jaccard(sh_a, candidates, sizes_carried=with_size, sh_b=sh_b)
         .filter(F.col("jaccard") >= threshold)
         .select(
             F.col("doc_a").alias("doc_new"),

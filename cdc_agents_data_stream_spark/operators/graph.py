@@ -19,11 +19,21 @@ Dangling mass (nodes with no out-edges — e.g. customers with no orders at
 small SFs) is redistributed uniformly each round, as in the original
 formulation: ``rank' = teleport + d·(Σ contrib + dangling_sum/N)``, all
 on the ppm grid.
+
+One consumer per round: on Spark 4.1 a subtree read by two consumers is
+computed once per consumer — neither ReusedExchange nor AQE stage reuse
+dedups it — so a loop whose round reads the previous round twice grows
+exponentially in the round count unless every round is cut (an eager
+``localCheckpoint`` each round, as ``pagerank_bucketed`` does, or a lazy
+one every few rounds). A round that reads the previous round exactly
+once needs no cut: its plan grows by one join and one aggregate per
+round, and a broadcast loop-invariant input is one reused exchange. The
+BFS / min-plus relaxation (``_relax``) is written that way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # Rank grid: parts-per-million. damping d = 0.85 → teleport (1-d) = 0.15.
@@ -437,125 +447,95 @@ r{i} AS MATERIALIZED (
 
 
 BFS_ROUNDS = 4
+# Up to this many edges a relaxation broadcasts the edge set and runs in
+# one task, with no per-round shuffle; above it every round is a
+# distributed join + grouped min (see `_relax`). At 1.17M edges (sf0.1,
+# 4 cores) the two plans took about the same time.
+RELAX_ONE_TASK_EDGES = 1 << 20
 
 
-def bfs_levels(
-    edges: DataFrame,
-    sources: DataFrame,
-    rounds: int = BFS_ROUNDS,
-) -> DataFrame:
+def bfs_levels(edges: DataFrame, sources: DataFrame, rounds: int = BFS_ROUNDS) -> DataFrame:
     """``(node, dist)`` shortest hop-distance from the source set within
-    ``rounds`` hops (unreached nodes are absent) — synchronous frontier
-    relaxation: each round every node takes min(own dist, neighbor dist
-    + 1). The same join + grouped-min per round as connected_components;
-    rounds bound the radius explicitly (at 100 TB you budget depth, not
-    iterate to convergence — most reachability questions are k-hop)."""
-    edges = edges.select(
-        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
-    ).localCheckpoint()
-    dist = sources.select(
-        F.col("node").cast("long").alias("node"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint()
-    for _ in range(rounds):
-        reached = (
-            edges.join(dist.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg((F.min("dist") + 1).cast("long").alias("ndist"))
-        )
-        dist = (
-            dist.join(reached, "node", "full_outer")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce("dist", F.lit(1 << 60)),
-                    F.coalesce("ndist", F.lit(1 << 60)),
-                ).alias("dist"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return dist
+    ``rounds`` hops (unreached nodes are absent) — `minplus_levels` with
+    every edge weight 1. Rounds bound the radius explicitly (at 100 TB you
+    budget depth, not iterate to convergence — most reachability
+    questions are k-hop)."""
+    return _relax(edges.select("src", "dst", F.lit(1).alias("w")), sources, rounds, "dist")
 
 
-def bfs_oracle_iterations(rounds: int = BFS_ROUNDS) -> str:
-    """CTE chain ``d1 .. d{rounds}`` unrolling the same relaxation for
-    DuckDB; expects ``edges(src, dst)`` and ``d0(node, dist)``."""
-    parts = []
-    for i in range(1, rounds + 1):
-        p = i - 1
-        parts.append(
-            f"""
-r{i} AS MATERIALIZED (
-  SELECT e.dst AS node, CAST(MIN(d.dist) + 1 AS BIGINT) AS ndist
-  FROM edges e JOIN d{p} d ON d.node = e.src
-  GROUP BY e.dst
-),
-d{i} AS MATERIALIZED (
-  SELECT COALESCE(d.node, r.node) AS node,
-         CAST(LEAST(COALESCE(d.dist, 1152921504606846976),
-                    COALESCE(r.ndist, 1152921504606846976)) AS BIGINT) AS dist
-  FROM d{p} d FULL OUTER JOIN r{i} r ON d.node = r.node
-)"""
-        )
-    return ",".join(parts)
-
-
-def minplus_levels(
-    edges: DataFrame,
-    sources: DataFrame,
-    rounds: int = BFS_ROUNDS,
-) -> DataFrame:
+def minplus_levels(edges: DataFrame, sources: DataFrame, rounds: int = BFS_ROUNDS) -> DataFrame:
     """Weighted shortest-path cost (min-plus / tropical relaxation):
-    ``(node, cost)`` = cheapest total edge weight from the source set
-    using at most ``rounds`` edges. Bellman-Ford's round structure with
-    the same join + grouped-min per round as ``bfs_levels`` (weight 1 ≡
-    BFS exactly); integer weights keep the oracle cross-engine exact.
-    Like BFS, the round budget bounds both work and path length — the
-    k-edge-cheapest-route question, not full SSSP convergence."""
-    edges = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("long").alias("w"),
-    ).localCheckpoint()
-    dist = sources.select(
-        F.col("node").cast("long").alias("node"), F.lit(0).cast("long").alias("cost")
-    ).localCheckpoint()
-    for _ in range(rounds):
-        reached = (
-            edges.join(dist.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min(F.col("cost") + F.col("w")).cast("long").alias("ncost"))
-        )
-        dist = (
-            dist.join(reached, "node", "full_outer")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce("cost", F.lit(1 << 60)),
-                    F.coalesce("ncost", F.lit(1 << 60)),
-                ).alias("cost"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return dist
+    ``(node, cost)`` = cheapest total edge weight ``w`` from the source
+    set using at most ``rounds`` edges — Bellman-Ford's round structure;
+    integer weights keep the oracle cross-engine exact. The round budget
+    bounds both work and path length (the k-edge-cheapest-route question,
+    not full SSSP convergence)."""
+    return _relax(edges, sources, rounds, "cost")
 
 
-def minplus_oracle_iterations(rounds: int = BFS_ROUNDS) -> str:
-    """CTE chain unrolling min-plus relaxation for DuckDB; expects
-    ``edges(src, dst, w)`` and ``d0(node, cost)``."""
+def _relax(edges: DataFrame, sources: DataFrame, rounds: int, out: str) -> DataFrame:
+    """``(node, out)`` after ``rounds`` synchronous min-plus rounds over
+    ``edges(src, dst, w)`` from ``sources(node)`` at 0; a source listed
+    twice is one row.
+
+    A round reads the previous one once: ``prev LEFT JOIN edges ON node =
+    src`` emits ``(node, d)`` and ``(dst, d + w)`` per joined row, and a
+    grouped ``min`` per node closes it — no per-round cut (module
+    docstring). The edge set is materialized once and counted on the way
+    (an ``Observation``, no extra job). Up to ``RELAX_ONE_TASK_EDGES``
+    edges it is broadcast into every round and the distance table stays
+    in ONE partition, so no grouped min needs an exchange and a caller's
+    ``orderBy`` is a local sort. Above it nothing is broadcast: the edge
+    set is shuffled on ``src`` once (the exchange is reused by every
+    round) and each round shuffles only its grouped min, after a
+    map-side partial min (an explicit repartition on ``node`` would drop
+    that combine: 1.3-1.5× slower at sf0.1)."""
+    size = Observation()
+    e = (
+        edges.select(*(F.col(c).cast("long").alias(c) for c in ("src", "dst", "w")))
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    one_task = size.get["n"] <= RELAX_ONE_TASK_EDGES
+    d0 = sources.select(F.col("node").cast("long").alias("node"), F.lit(0).cast("long").alias("d"))
+    hint = "/*+ BROADCAST(e) */" if one_task else ""
+    ctes = ["d0 AS (SELECT * FROM {d0})"] + [
+        f"""d{i} AS (SELECT node, min(d) AS d FROM (
+  SELECT {hint}
+         inline(array(named_struct('node', p.node, 'd', p.d), named_struct('node', e.dst, 'd', p.d + e.w)))
+  FROM d{i - 1} p LEFT JOIN {{e}} e ON p.node = e.src
+) WHERE node IS NOT NULL GROUP BY node)"""
+        for i in range(1, rounds + 1)
+    ]
+    # rounds=0 still folds a repeated source; coalesce: a group's min is
+    # never NULL, and the output schema says so (dist/cost NOT NULL)
+    last = f"d{rounds}" if rounds else "(SELECT node, min(d) AS d FROM d0 GROUP BY node)"
+    return edges.sparkSession.sql(
+        f"WITH {', '.join(ctes)} SELECT node, coalesce(d, 0) AS {out} FROM {last}",
+        d0=d0.coalesce(1) if one_task else d0,
+        e=e,
+    )
+
+
+def relax_oracle_iterations(col: str, weight: str, rounds: int = BFS_ROUNDS) -> str:
+    """CTE chain ``d1 .. d{rounds}`` unrolling the same relaxation for
+    DuckDB in the two-step form (the relaxed frontier, full-outer-joined
+    with the previous round); expects ``edges`` and ``d0(node, {col})``.
+    ``weight`` is the SQL edge weight: ``1`` for BFS, ``e.w`` for min-plus."""
     parts = []
     for i in range(1, rounds + 1):
         p = i - 1
         parts.append(
             f"""
 r{i} AS MATERIALIZED (
-  SELECT e.dst AS node, CAST(MIN(d.cost + e.w) AS BIGINT) AS ncost
+  SELECT e.dst AS node, CAST(MIN(d.{col} + {weight}) AS BIGINT) AS n{col}
   FROM edges e JOIN d{p} d ON d.node = e.src
   GROUP BY e.dst
 ),
 d{i} AS MATERIALIZED (
   SELECT COALESCE(d.node, r.node) AS node,
-         CAST(LEAST(COALESCE(d.cost, 1152921504606846976),
-                    COALESCE(r.ncost, 1152921504606846976)) AS BIGINT) AS cost
+         CAST(LEAST(COALESCE(d.{col}, 1152921504606846976),
+                    COALESCE(r.n{col}, 1152921504606846976)) AS BIGINT) AS {col}
   FROM d{p} d FULL OUTER JOIN r{i} r ON d.node = r.node
 )"""
         )

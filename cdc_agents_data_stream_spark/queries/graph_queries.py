@@ -375,10 +375,13 @@ def graph_bfs_reach(spark, sf_dir):
         )
         .distinct()
     )
+    # both directions from ONE read of pairs (a union would plan the
+    # join + distinct twice)
     edges = pairs.select(
-        (F.col("ck") * 2).alias("src"), (F.col("sk") * 2 + 1).alias("dst")
-    ).unionByName(
-        pairs.select((F.col("sk") * 2 + 1).alias("src"), (F.col("ck") * 2).alias("dst"))
+        F.expr(
+            "inline(array(named_struct('src', ck * 2, 'dst', sk * 2 + 1),"
+            " named_struct('src', sk * 2 + 1, 'dst', ck * 2)))"
+        )
     )
     sources = load(spark, sf_dir, "customer").filter(F.col("c_nationkey") == 0).select(
         (F.col("c_custkey").cast("long") * 2).alias("node")
@@ -401,7 +404,7 @@ d0 AS (
   SELECT CAST(c_custkey AS BIGINT) * 2 AS node, CAST(0 AS BIGINT) AS dist
   FROM customer WHERE c_nationkey = 0
 ),
-{G.bfs_oracle_iterations()}
+{G.relax_oracle_iterations("dist", "1")}
 SELECT node, dist FROM d{G.BFS_ROUNDS} ORDER BY node
 """
 
@@ -432,10 +435,9 @@ def graph_cheapest_route(spark, sf_dir):
         .agg(F.min("cents").alias("w"))
     )
     edges = pairs.select(
-        (F.col("ck") * 2).alias("src"), (F.col("sk") * 2 + 1).alias("dst"), "w"
-    ).unionByName(
-        pairs.select(
-            (F.col("sk") * 2 + 1).alias("src"), (F.col("ck") * 2).alias("dst"), "w"
+        F.expr(
+            "inline(array(named_struct('src', ck * 2, 'dst', sk * 2 + 1, 'w', w),"
+            " named_struct('src', sk * 2 + 1, 'dst', ck * 2, 'w', w)))"
         )
     )
     sources = load(spark, sf_dir, "customer").filter(F.col("c_nationkey") == 0).select(
@@ -461,7 +463,7 @@ d0 AS (
   SELECT CAST(c_custkey AS BIGINT) * 2 AS node, CAST(0 AS BIGINT) AS cost
   FROM customer WHERE c_nationkey = 0
 ),
-{G.minplus_oracle_iterations()}
+{G.relax_oracle_iterations("cost", "e.w")}
 SELECT node, cost FROM d{G.BFS_ROUNDS} ORDER BY node
 """
 

@@ -7,10 +7,16 @@ Run: python tests/driver_replica.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# The repository root, on the driver's sys.path AND on PYTHONPATH: Spark's
+# Python workers inherit the environment, not sys.path, and the queries'
+# UDFs import the package inside them.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 
 def _check_closure_budget(name: str) -> None:
@@ -52,8 +58,6 @@ def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
     # opt-in knob: SPARK_GRAFT_REPLICA_MEM raises the driver heap for
     # beyond-driver-scale sweeps (the sf1 derivative OOMs the 1g default
     # JVM; at the driver's own sf0.01 the default stays untouched).
-    import os
-
     builder = (
         SparkSession.builder.master("local[8]")
         .appName("driver-replica")

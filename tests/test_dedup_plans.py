@@ -309,3 +309,30 @@ def test_pair_jaccard_recomputes_sizes_unless_told_they_are_carried(spark):
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in recomputed] == [(1, 2, 0.5)]
     carried = _pair_jaccard(sh, cands, sizes_carried=True).collect()  # bounded: one pair
     assert [r.jaccard for r in carried] == [0.125]
+
+
+def test_minhash_incremental_overlapping_id_keeps_each_side(spark):
+    """A doc_id present in the new batch AND in the history is two
+    documents: the index verify must score each side's own gram set. Its
+    pairs equal the array verify's (which joins per side by
+    construction), and no score exceeds 1. Unioning both sides' shingles
+    gave new doc 5 both gram sets: its pair with history doc 6 (the same
+    text) scored 11/(12-11) = 11."""
+    from cdc_agents_data_stream_spark.operators.dedup import minhash_lsh_incremental
+
+    x = "alpha beta gamma delta epsilon zeta eta theta"
+    x2 = "alpha beta gamma delta epsilon zeta eta iota"  # 5 of x's 6 trigrams
+    hist = spark.createDataFrame([(5, x2), (6, x)], ["doc_id", "text"])
+    new = spark.createDataFrame([(5, x)], ["doc_id", "text"])
+
+    def pairs(verify):
+        return {
+            (r["doc_new"], r["doc_hist"]): r["jaccard"]
+            for r in minhash_lsh_incremental(hist, new, threshold=0.5, verify=verify).collect()
+        }
+
+    got = pairs("index")
+    assert got == pairs("array")
+    assert got[(5, 6)] == 1.0
+    assert got.get((5, 5), round(5 / 7, 6)) == round(5 / 7, 6)
+    assert all(j <= 1.0 for j in got.values())

@@ -1,7 +1,14 @@
-"""PageRank unit tests: hand-computed integer-grid fixtures covering the
-update rule, dangling-mass redistribution, and isolated vertices."""
+"""Graph operator unit tests: hand-computed PageRank integer-grid
+fixtures (update rule, dangling-mass redistribution, isolated vertices),
+triangles, label propagation, and the BFS / min-plus relaxation against a
+plain-Python Bellman-Ford."""
 
 from __future__ import annotations
+
+import random
+
+import pytest
+from pyspark.sql import functions as F
 
 from cdc_agents_data_stream_spark.operators import graph as G
 
@@ -164,3 +171,82 @@ def test_bfs_levels_depth_budget_and_min_distance(spark):
     # depth budget: with rounds=1 node 4 is unreached
     got1 = {r["node"]: r["dist"] for r in G.bfs_levels(edf, src, rounds=1).collect()}
     assert 4 not in got1
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_duplicate_sources_give_one_row_per_node(spark):
+    # the dict comparisons above would hide a node listed twice
+    edf = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    src = spark.createDataFrame([(1,), (1,)], "node long")
+    assert _rows(G.bfs_levels(edf, src)) == [(1, 0), (2, 1), (3, 2)]
+    assert _rows(G.bfs_levels(edf, src, rounds=0)) == [(1, 0)]
+    wdf = spark.createDataFrame([(1, 2, 5), (2, 3, 7)], "src long, dst long, w long")
+    assert _rows(G.minplus_levels(wdf, src)) == [(1, 0), (2, 5), (3, 12)]
+    assert _rows(G.minplus_levels(wdf, src, rounds=0)) == [(1, 0)]
+
+
+def _bellman_ford(edges, sources, rounds):
+    """Synchronous k-round Bellman-Ford over (src, dst, w) triples."""
+    dist = {s: 0 for s in sources}
+    for _ in range(rounds):
+        nxt = dict(dist)
+        for u, v, w in edges:
+            if u in dist and (v not in nxt or dist[u] + w < nxt[v]):
+                nxt[v] = dist[u] + w
+        dist = nxt
+    return sorted(dist.items())
+
+
+@pytest.mark.parametrize("one_task_edges", [G.RELAX_ONE_TASK_EDGES, 3], ids=["one_task", "shuffled"])
+def test_relaxation_matches_python_bellman_ford(spark, monkeypatch, one_task_edges):
+    """On seeded random graphs with self-loops, duplicate edges (also
+    with different weights) and a source no edge touches, at 0, 1 and 4
+    rounds: `minplus_levels` equals Bellman-Ford, and `bfs_levels` equals
+    both BFS and `minplus_levels` over the same edges at weight 1 — in
+    the one-task plan and in the shuffled one."""
+    monkeypatch.setattr(G, "RELAX_ONE_TASK_EDGES", one_task_edges)
+    rng = random.Random(11)
+    for _ in range(3):
+        n = rng.randint(6, 14)
+        edges = [(rng.randrange(n), rng.randrange(n), rng.randint(1, 9)) for _ in range(rng.randint(n, 3 * n))]
+        u, v, w = edges[0]
+        edges += [(u, v, w), (u, v, w + 3), (0, 0, 2)]
+        sources = [0, rng.randrange(n), n + 5]
+        wdf = spark.createDataFrame(edges, "src long, dst long, w long")
+        edf = wdf.select("src", "dst")
+        sdf = spark.createDataFrame([(s,) for s in sources], "node long")
+        unit = [(a, b, 1) for a, b, _ in edges]
+        for rounds in (0, 1, 4):
+            hops = _bellman_ford(unit, sources, rounds)
+            assert _rows(G.minplus_levels(wdf, sdf, rounds)) == _bellman_ford(edges, sources, rounds)
+            assert _rows(G.bfs_levels(edf, sdf, rounds)) == hops
+            assert _rows(G.minplus_levels(edf.withColumn("w", F.lit(1)), sdf, rounds)) == hops
+
+
+@pytest.mark.parametrize(
+    "one_task_edges,per_round", [(G.RELAX_ONE_TASK_EDGES, 0), (4, 1)], ids=["one_task", "shuffled"]
+)
+def test_relaxation_plan_is_linear_in_rounds(spark, monkeypatch, one_task_edges, per_round):
+    """Building the result runs the same jobs at any round count (the
+    edge set's materialization; no round is checkpointed), and running
+    it adds one shuffle stage — one AQE job — per extra round above
+    ``RELAX_ONE_TASK_EDGES`` edges, none up to it."""
+    from tests.test_driver_cost import _jobs
+
+    monkeypatch.setattr(G, "RELAX_ONE_TASK_EDGES", one_task_edges)
+    edf = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
+    src = spark.createDataFrame([(0,)], "node long")
+
+    def jobs(rounds):
+        g = f"relax_{one_task_edges}_{rounds}"
+        df, built = _jobs(spark, f"{g}_build", lambda: G.bfs_levels(edf, src, rounds))
+        rows, ran = _jobs(spark, f"{g}_run", df.collect)
+        assert len(rows) == rounds + 1
+        return built, ran
+
+    (b2, r2), (b6, r6) = jobs(2), jobs(6)
+    assert b6 == b2
+    assert r6 - r2 == 4 * per_round
