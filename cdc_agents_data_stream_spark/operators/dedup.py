@@ -206,7 +206,8 @@ def _pair_jaccard(
     """Exact Jaccard over a shingle index; optionally restricted to
     candidate (doc_a, doc_b) pairs. With ``sizes_carried``, ``sh_b`` is
     the index ``doc_b`` is looked up in (default: ``sh``) — the
-    incremental probe keeps the new and the history side apart.
+    incremental probe keeps the new and the history side apart; the
+    other forms take sizes from ``sh`` and refuse an ``sh_b``.
 
     ``sizes_carried=True`` says ``candidates`` carries ``sz_a``/``sz_b`` (the
     size-carry form: per-doc set sizes computed as a free extra aggregate in
@@ -215,6 +216,8 @@ def _pair_jaccard(
     the shingle input's only remaining consumers are the two intersection
     sides. Without it, sizes are recomputed from ``sh`` whatever columns
     ``candidates`` has."""
+    if sh_b is not None and (candidates is None or not sizes_carried):
+        raise ValueError("sh_b needs candidates with sizes_carried=True")
     if candidates is not None and sizes_carried:
         a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
         b_sh = (sh if sh_b is None else sh_b).select(
@@ -603,7 +606,7 @@ def minhash_lsh_incremental(
     sh_a = sh_new.join(candidates.select(F.col("doc_a").alias(id_col)), id_col, "left_semi")
     sh_b = sh_hist.join(candidates.select(F.col("doc_b").alias(id_col)), id_col, "left_semi")
     return (
-        _pair_jaccard(sh_a, candidates, sizes_carried=with_size, sh_b=sh_b)
+        _pair_jaccard(sh_a, candidates, sizes_carried=True, sh_b=sh_b)
         .filter(F.col("jaccard") >= threshold)
         .select(
             F.col("doc_a").alias("doc_new"),

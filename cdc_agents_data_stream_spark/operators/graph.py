@@ -447,11 +447,6 @@ r{i} AS MATERIALIZED (
 
 
 BFS_ROUNDS = 4
-# Up to this many edges a relaxation broadcasts the edge set and runs in
-# one task, with no per-round shuffle; above it every round is a
-# distributed join + grouped min (see `_relax`). At 1.17M edges (sf0.1,
-# 4 cores) the two plans took about the same time.
-RELAX_ONE_TASK_EDGES = 1 << 20
 
 
 def bfs_levels(edges: DataFrame, sources: DataFrame, rounds: int = BFS_ROUNDS) -> DataFrame:
@@ -482,35 +477,47 @@ def _relax(edges: DataFrame, sources: DataFrame, rounds: int, out: str) -> DataF
     src`` emits ``(node, d)`` and ``(dst, d + w)`` per joined row, and a
     grouped ``min`` per node closes it — no per-round cut (module
     docstring). The edge set is materialized once and counted on the way
-    (an ``Observation``, no extra job). Up to ``RELAX_ONE_TASK_EDGES``
-    edges it is broadcast into every round and the distance table stays
-    in ONE partition, so no grouped min needs an exchange and a caller's
-    ``orderBy`` is a local sort. Above it nothing is broadcast: the edge
-    set is shuffled on ``src`` once (the exchange is reused by every
-    round) and each round shuffles only its grouped min, after a
-    map-side partial min (an explicit repartition on ``node`` would drop
-    that combine: 1.3-1.5× slower at sf0.1)."""
+    (an ``Observation``, no extra job). When that count times the row
+    width fits the session's ``autoBroadcastJoinThreshold`` — the size
+    test Spark applies to every join — the edge set is broadcast into
+    every round and the distance table stays in ONE partition, so no
+    grouped min needs an exchange and a caller's ``orderBy`` is a local
+    sort. Above it nothing is broadcast: the edge set is shuffled on
+    ``src`` once (the exchange is reused by every round) and each round
+    shuffles only its grouped min, after a map-side partial min (an
+    explicit repartition on ``node`` would drop that combine: 1.3-1.5×
+    slower at sf0.1).
+
+    Every cost is capped at the oracle's ``2^60`` "unreached" sentinel
+    (``relax_oracle_iterations``; ``least`` skips NULL), so a NULL weight
+    reaches its destination at the sentinel and no emitted ``d`` is NULL."""
+    spark = edges.sparkSession
     size = Observation()
     e = (
         edges.select(*(F.col(c).cast("long").alias(c) for c in ("src", "dst", "w")))
         .observe(size, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    one_task = size.get["n"] <= RELAX_ONE_TASK_EDGES
+    # 32 bytes: Spark's size-per-row estimate for three longs (an 8-byte
+    # row header plus 8 per column); a threshold of -1 never broadcasts
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    one_task = size.get["n"] * 32 <= limit
     d0 = sources.select(F.col("node").cast("long").alias("node"), F.lit(0).cast("long").alias("d"))
     hint = "/*+ BROADCAST(e) */" if one_task else ""
     ctes = ["d0 AS (SELECT * FROM {d0})"] + [
         f"""d{i} AS (SELECT node, min(d) AS d FROM (
   SELECT {hint}
-         inline(array(named_struct('node', p.node, 'd', p.d), named_struct('node', e.dst, 'd', p.d + e.w)))
+         inline(array(named_struct('node', p.node, 'd', p.d),
+                      named_struct('node', e.dst, 'd', least(p.d + e.w, {1 << 60}))))
   FROM d{i - 1} p LEFT JOIN {{e}} e ON p.node = e.src
 ) WHERE node IS NOT NULL GROUP BY node)"""
         for i in range(1, rounds + 1)
     ]
     # rounds=0 still folds a repeated source; coalesce: a group's min is
-    # never NULL, and the output schema says so (dist/cost NOT NULL)
+    # never NULL (nor is any d it is taken over), and the output schema
+    # says so (dist/cost NOT NULL)
     last = f"d{rounds}" if rounds else "(SELECT node, min(d) AS d FROM d0 GROUP BY node)"
-    return edges.sparkSession.sql(
+    return spark.sql(
         f"WITH {', '.join(ctes)} SELECT node, coalesce(d, 0) AS {out} FROM {last}",
         d0=d0.coalesce(1) if one_task else d0,
         e=e,

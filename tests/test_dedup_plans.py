@@ -309,6 +309,9 @@ def test_pair_jaccard_recomputes_sizes_unless_told_they_are_carried(spark):
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in recomputed] == [(1, 2, 0.5)]
     carried = _pair_jaccard(sh, cands, sizes_carried=True).collect()  # bounded: one pair
     assert [r.jaccard for r in carried] == [0.125]
+    # a second index is only read by the sizes-carried form
+    with pytest.raises(ValueError, match="sh_b"):
+        _pair_jaccard(sh, cands, sh_b=sh)
 
 
 def test_minhash_incremental_overlapping_id_keeps_each_side(spark):

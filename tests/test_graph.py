@@ -6,6 +6,7 @@ plain-Python Bellman-Ford."""
 from __future__ import annotations
 
 import random
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -200,53 +201,86 @@ def _bellman_ford(edges, sources, rounds):
     return sorted(dist.items())
 
 
-@pytest.mark.parametrize("one_task_edges", [G.RELAX_ONE_TASK_EDGES, 3], ids=["one_task", "shuffled"])
-def test_relaxation_matches_python_bellman_ford(spark, monkeypatch, one_task_edges):
+@contextmanager
+def _broadcast_threshold(spark, value):
+    """``spark.sql.autoBroadcastJoinThreshold`` set to ``value`` (None:
+    the session's own) for the block — the relaxation's plan switch."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["one_task", "shuffled"])
+def test_relaxation_matches_python_bellman_ford(spark, threshold):
     """On seeded random graphs with self-loops, duplicate edges (also
     with different weights) and a source no edge touches, at 0, 1 and 4
     rounds: `minplus_levels` equals Bellman-Ford, and `bfs_levels` equals
     both BFS and `minplus_levels` over the same edges at weight 1 — in
-    the one-task plan and in the shuffled one."""
-    monkeypatch.setattr(G, "RELAX_ONE_TASK_EDGES", one_task_edges)
+    the one-task plan and in the shuffled one (broadcast disabled)."""
     rng = random.Random(11)
-    for _ in range(3):
-        n = rng.randint(6, 14)
-        edges = [(rng.randrange(n), rng.randrange(n), rng.randint(1, 9)) for _ in range(rng.randint(n, 3 * n))]
-        u, v, w = edges[0]
-        edges += [(u, v, w), (u, v, w + 3), (0, 0, 2)]
-        sources = [0, rng.randrange(n), n + 5]
-        wdf = spark.createDataFrame(edges, "src long, dst long, w long")
-        edf = wdf.select("src", "dst")
-        sdf = spark.createDataFrame([(s,) for s in sources], "node long")
-        unit = [(a, b, 1) for a, b, _ in edges]
-        for rounds in (0, 1, 4):
-            hops = _bellman_ford(unit, sources, rounds)
-            assert _rows(G.minplus_levels(wdf, sdf, rounds)) == _bellman_ford(edges, sources, rounds)
-            assert _rows(G.bfs_levels(edf, sdf, rounds)) == hops
-            assert _rows(G.minplus_levels(edf.withColumn("w", F.lit(1)), sdf, rounds)) == hops
+    with _broadcast_threshold(spark, threshold):
+        for _ in range(3):
+            n = rng.randint(6, 14)
+            edges = [(rng.randrange(n), rng.randrange(n), rng.randint(1, 9)) for _ in range(rng.randint(n, 3 * n))]
+            u, v, w = edges[0]
+            edges += [(u, v, w), (u, v, w + 3), (0, 0, 2)]
+            sources = [0, rng.randrange(n), n + 5]
+            wdf = spark.createDataFrame(edges, "src long, dst long, w long")
+            edf = wdf.select("src", "dst")
+            sdf = spark.createDataFrame([(s,) for s in sources], "node long")
+            unit = [(a, b, 1) for a, b, _ in edges]
+            for rounds in (0, 1, 4):
+                hops = _bellman_ford(unit, sources, rounds)
+                assert _rows(G.minplus_levels(wdf, sdf, rounds)) == _bellman_ford(edges, sources, rounds)
+                assert _rows(G.bfs_levels(edf, sdf, rounds)) == hops
+                assert _rows(G.minplus_levels(edf.withColumn("w", F.lit(1)), sdf, rounds)) == hops
 
 
-@pytest.mark.parametrize(
-    "one_task_edges,per_round", [(G.RELAX_ONE_TASK_EDGES, 0), (4, 1)], ids=["one_task", "shuffled"]
-)
-def test_relaxation_plan_is_linear_in_rounds(spark, monkeypatch, one_task_edges, per_round):
+def test_null_weight_relaxes_to_the_oracle_sentinel(spark):
+    """A NULL-weight edge reaches its destination at the DuckDB oracle's
+    2^60 "unreached" sentinel, and no cost past it exceeds the sentinel —
+    the same rows `relax_oracle_iterations` gives, not a 0-cost node."""
+    import duckdb
+
+    edges = [(1, 2, None), (2, 3, 5), (1, 4, 2), (4, 2, None), (4, 5, 1)]
+    wdf = spark.createDataFrame(edges, "src long, dst long, w long")
+    src = spark.createDataFrame([(1,)], "node long")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE edges (src BIGINT, dst BIGINT, w BIGINT)")
+    con.executemany("INSERT INTO edges VALUES (?, ?, ?)", edges)
+    oracle = con.execute(
+        "WITH d0 AS (SELECT CAST(1 AS BIGINT) AS node, CAST(0 AS BIGINT) AS cost),"
+        f" {G.relax_oracle_iterations('cost', 'e.w', rounds=3)} SELECT node, cost FROM d3"
+    ).fetchall()
+    got = _rows(G.minplus_levels(wdf, src, rounds=3))
+    assert got == sorted(oracle)
+    assert got == [(1, 0), (2, 1 << 60), (3, 1 << 60), (4, 2), (5, 3)]
+
+
+@pytest.mark.parametrize("threshold,per_round", [(None, 0), ("-1", 1)], ids=["one_task", "shuffled"])
+def test_relaxation_plan_is_linear_in_rounds(spark, threshold, per_round):
     """Building the result runs the same jobs at any round count (the
     edge set's materialization; no round is checkpointed), and running
-    it adds one shuffle stage — one AQE job — per extra round above
-    ``RELAX_ONE_TASK_EDGES`` edges, none up to it."""
+    it adds one shuffle stage — one AQE job — per extra round when the
+    edge set does not fit the broadcast threshold, none when it does."""
     from tests.test_driver_cost import _jobs
 
-    monkeypatch.setattr(G, "RELAX_ONE_TASK_EDGES", one_task_edges)
     edf = spark.createDataFrame([(i, i + 1) for i in range(20)], "src long, dst long")
     src = spark.createDataFrame([(0,)], "node long")
 
     def jobs(rounds):
-        g = f"relax_{one_task_edges}_{rounds}"
+        g = f"relax_{threshold}_{rounds}"
         df, built = _jobs(spark, f"{g}_build", lambda: G.bfs_levels(edf, src, rounds))
         rows, ran = _jobs(spark, f"{g}_run", df.collect)
         assert len(rows) == rounds + 1
         return built, ran
 
-    (b2, r2), (b6, r6) = jobs(2), jobs(6)
+    with _broadcast_threshold(spark, threshold):
+        (b2, r2), (b6, r6) = jobs(2), jobs(6)
     assert b6 == b2
     assert r6 - r2 == 4 * per_round
